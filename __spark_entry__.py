@@ -3044,7 +3044,8 @@ _R5_WINDOW = [
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     base = _registry()
-    assert all(k in base for k in _R5_WINDOW) and len(_R5_WINDOW) == 50
+    if len(_R5_WINDOW) != 50 or len(base.keys() & set(_R5_WINDOW)) != 50:
+        raise ValueError(f"_R5_WINDOW must name 50 distinct registered queries: {_R5_WINDOW}")
     head = {k: base[k] for k in _R5_WINDOW}
     return {**head, **{k: v for k, v in base.items() if k not in head}}
 

@@ -9,13 +9,16 @@
   in ``n_tables`` buckets; a query probes its buckets only, cutting the
   candidate set by ~bucket-count x. Hyperplanes are deterministic
   (seeded hash of (table, bit, dim)), so results are reproducible across runs
-  and cluster sizes.
+  and cluster sizes. A probe compares stored per-table codes (``lsh_codes``).
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,10 +31,31 @@ def _norm_expr(col: str) -> str:
     return f"greatest(sqrt(aggregate({col}, 0.0d, (a, x) -> a + x * x)), 1e-100d)"
 
 
-def _as_double(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+def _as_double(df: DataFrame, vec_col: str, id_col: str, *keep: str) -> DataFrame:
     return df.select(
         F.col(id_col).cast("string").alias("id"),
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
+        *keep,
+    )
+
+
+def _dot(a: str, b: str) -> str:
+    """Dot product folded left to right in index order (replayable exactly)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0d, (a, x) -> a + x)"
+
+
+def _cosine(a: str, b: str) -> F.Column:
+    """Cosine of two double-array columns, rounded 4dp."""
+    return F.round(F.expr(_dot(a, b)) / (F.expr(_norm_expr(a)) * F.expr(_norm_expr(b))), 4)
+
+
+def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, id, score, rank): each query's k best, ties broken on id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "id", "score", "rank")
     )
 
 
@@ -44,11 +68,7 @@ def cosine_scores(embs: DataFrame, query: list[float],
     v = _as_double(embs, vec_col, id_col)
     return v.select(
         "id",
-        F.round(
-            F.expr(f"aggregate(zip_with(v, {qlit}, (x, y) -> x * y), 0.0d, (a, x) -> a + x)")
-            / (F.expr(_norm_expr("v")) * F.lit(qn)),
-            4,
-        ).alias("score"),
+        F.round(F.expr(_dot("v", qlit)) / (F.expr(_norm_expr("v")) * F.lit(qn)), 4).alias("score"),
     )
 
 
@@ -73,18 +93,9 @@ def topk_bruteforce_batch(embs: DataFrame, queries: DataFrame, k: int = 10,
     ).withColumn("nq", F.expr(_norm_expr("qv")))
     scored = v.crossJoin(F.broadcast(q)).select(
         "query_id", "id",
-        F.round(
-            F.expr("aggregate(zip_with(v, qv, (x, y) -> x * y), 0.0d, (a, x) -> a + x)")
-            / (F.col("nv") * F.col("nq")),
-            4,
-        ).alias("score"),
+        F.round(F.expr(_dot("v", "qv")) / (F.col("nv") * F.col("nq")), 4).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
+    return _topk_per_query(scored, k)
 
 
 def ann_lsh_batch(
@@ -98,58 +109,32 @@ def ann_lsh_batch(
     (query_id, id, score, rank).
 
     Scale shape (the FAISS-index-probe analog, back/kgg/retriever.py:62-68 —
-    every query hits the index, not the corpus): ONE scan of the corpus emits
-    each vector's (table, bucket) pair per LSH table (#vectors x n_tables
-    rows); the tiny query table gets the same treatment and is broadcast, so
-    candidates come from an equi-join on (table, bucket) — the corpus-sized
-    crossJoin of topk_bruteforce_batch never happens. A vector matching a
-    query in several tables is deduped by the (query_id, id) aggregate,
-    which also carries the two vectors to the exact cosine rescore (the
-    candidate set is bucket-sized; re-joining the full corpus for vectors
-    would shuffle far more). Buckets are the same sha256-derived hyperplanes
-    as ann_lsh, so the whole approximate result replays in the SQL oracle."""
+    every query hits the index, not the corpus): ONE scan of the corpus
+    posexplodes each vector's codes (``lsh_codes``: stored at index time,
+    else derived in-plan) into (table, bucket) int rows; the tiny query
+    table gets the same treatment and is broadcast, so candidates come from
+    an equi-join on (table, bucket) — the corpus-sized crossJoin of
+    topk_bruteforce_batch never happens. A vector matching a query in
+    several tables is deduped by the (query_id, id) aggregate, which also
+    carries the two vectors to the exact cosine rescore (the candidate set
+    is bucket-sized; re-joining the full corpus for vectors would shuffle
+    far more). Buckets are the same sha256-derived hyperplanes as ann_lsh,
+    so the whole approximate result replays in the SQL oracle."""
     if dim is None:
         dim = len(queries.select(qvec_col).first()[0])
-    v = _as_double(embs, vec_col, id_col)
-    tb = F.explode(F.array(*[
-        F.struct(F.lit(t).alias("t"),
-                 lsh_bucket_expr("v", dim, n_bits, t, seed).alias("bucket"))
-        for t in range(n_tables)
-    ])).alias("tb")
-    bucketed = v.select("id", "v", tb).select(
-        "id", "v", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket")
+    bucketed = lsh_codes(embs, dim, n_bits, n_tables, seed, id_col, vec_col).select(
+        "id", "v", F.posexplode("lsh").alias("t", "bucket")
     )
-    q = queries.select(
-        F.col(qid_col).cast("string").alias("query_id"),
-        F.expr(f"transform({qvec_col}, x -> cast(x as double))").alias("qv"),
-    )
-    qtb = F.explode(F.array(*[
-        F.struct(F.lit(t).alias("t"),
-                 lsh_bucket_expr("qv", dim, n_bits, t, seed).alias("bucket"))
-        for t in range(n_tables)
-    ])).alias("tb")
-    q_bucketed = q.select("query_id", "qv", qtb).select(
-        "query_id", "qv", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket")
+    q_bucketed = lsh_codes(queries, dim, n_bits, n_tables, seed, qid_col, qvec_col).select(
+        F.col("id").alias("query_id"), F.col("v").alias("qv"),
+        F.posexplode("lsh").alias("t", "bucket"),
     )
     cands = (
         bucketed.join(F.broadcast(q_bucketed), ["t", "bucket"])
         .groupBy("query_id", "id")
         .agg(F.first("v").alias("v"), F.first("qv").alias("qv"))
     )
-    scored = cands.select(
-        "query_id", "id",
-        F.round(
-            F.expr("aggregate(zip_with(v, qv, (x, y) -> x * y), 0.0d, (a, x) -> a + x)")
-            / (F.expr(_norm_expr("v")) * F.expr(_norm_expr("qv"))),
-            4,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
+    return _topk_per_query(cands.select("query_id", "id", _cosine("v", "qv").alias("score")), k)
 
 
 def hyperplane(seed: int, table: int, bit: int, dim: int) -> list[float]:
@@ -184,6 +169,75 @@ def lsh_bucket_expr(vec_col: str, dim: int, n_bits: int, table: int, seed: int =
     return F.expr(" + ".join(bits)).cast("int")
 
 
+@functools.lru_cache(maxsize=8)
+def _planes(dim: int, n_bits: int, n_tables: int, seed: int) -> np.ndarray:
+    """All hyperplanes as a (n_tables * n_bits, dim) matrix; row t * n_bits + b."""
+    return np.array([hyperplane(seed, t, b, dim)
+                     for t in range(n_tables) for b in range(n_bits)])
+
+
+def lsh_code_matrix(vecs, n_bits: int, n_tables: int, seed: int = 42) -> np.ndarray:
+    """(n, n_tables) int32 bucket ids of n vectors — bit-identical to
+    ``lsh_bucket_expr`` on the same (double) components. Each projection is
+    summed left to right over the dimensions, 0.0 + x0*h0 + x1*h1 + ..., the
+    order Spark's ``aggregate(zip_with(...))`` folds in; ``np.dot`` would sum
+    pairwise/SIMD and could flip a sign near 0. One vectorized step per
+    dimension, so an Arrow batch of vectors costs a few numpy ops."""
+    vecs = np.asarray(vecs, dtype=np.float64)
+    n, dim = vecs.shape
+    planes = _planes(dim, n_bits, n_tables, seed)
+    acc = np.zeros((n, len(planes)))
+    for d in range(dim):
+        acc += vecs[:, d:d + 1] * planes[:, d]
+    bits = (acc >= 0).reshape(n, n_tables, n_bits)
+    return (bits << np.arange(n_bits)).sum(axis=2).astype(np.int32)
+
+
+def lsh_params(dim: int, n_bits: int, n_tables: int, seed: int, vec_col: str) -> dict:
+    """Column metadata that marks stored codes with what they were built
+    under; ``lsh_codes`` reads stored codes only when this matches."""
+    return {"lsh": {"vec_col": vec_col, "dim": dim, "n_bits": n_bits,
+                    "n_tables": n_tables, "seed": seed}}
+
+
+def lsh_codes(
+    embs: DataFrame, dim: int, n_bits: int, n_tables: int, seed: int = 42,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, v, lsh): string ids, double vectors and ``lsh`` array<int>, one
+    bucket id per table — the one bucketing step every LSH operator shares.
+
+    An index that stores its codes (``lsh`` tagged by ``lsh_params`` with the
+    same vector column, dim, bits, tables and seed, as index_edges writes)
+    is read as is. Anything else (ad-hoc tables, raw embeddings, streamed
+    batches, or an index built under other parameters) gets its codes
+    derived in-plan from ``lsh_bucket_expr`` — never stale codes. A caller
+    that replaces the vector column of a coded table must drop ``lsh``."""
+    if "lsh" in embs.columns and (
+        embs.schema["lsh"].metadata == lsh_params(dim, n_bits, n_tables, seed, vec_col)
+    ):
+        return _as_double(embs, vec_col, id_col, "lsh")
+    return _as_double(embs, vec_col, id_col).withColumn("lsh", F.array(*[
+        lsh_bucket_expr("v", dim, n_bits, t, seed) for t in range(n_tables)
+    ]))
+
+
+def lsh_probe(query: list[float], n_bits: int, n_tables: int, seed: int = 42,
+              codes: str = "lsh", table: str | None = None) -> F.Column:
+    """Candidate predicate for one query vector: a row matches iff its code
+    equals the query's in ANY table — int compares only. ``codes`` is an
+    array<int> column (one code per table), or with ``table`` an int code
+    column of (row, table) rows."""
+    qb = lsh_code_matrix([[float(x) for x in query]], n_bits, n_tables, seed)[0]
+
+    def hit(t: int, b: int) -> F.Column:
+        if table is None:
+            return F.col(codes)[t] == b
+        return (F.col(table) == t) & (F.col(codes) == b)
+
+    return functools.reduce(operator.or_, (hit(t, int(b)) for t, b in enumerate(qb)))
+
+
 def ann_lsh(
     embs: DataFrame, query: list[float], k: int = 10,
     dim: int | None = None, n_bits: int = 8, n_tables: int = 4, seed: int = 42,
@@ -192,32 +246,23 @@ def ann_lsh(
     """Approximate top-k: probe only the query's LSH buckets (union over
     tables), exact-rescore the candidates. Output schema == topk_bruteforce.
 
-    The probe is ONE scan: a vector is a candidate iff it matches the query's
-    bucket in ANY table, expressed as a single OR-of-equalities filter — a
-    per-table scan-and-union would recompute the (possibly expensive, e.g.
-    embedding-UDF-backed) input once per table and need a dedup shuffle."""
+    The probe is ONE scan with a single OR-of-int-equalities Filter
+    (``lsh_probe``) over the codes: index_edges stores them (computed at
+    index time, in the Arrow pass that embeds the text), so a question costs
+    n_tables int compares per indexed row and a cosine per candidate; other
+    inputs derive them in-plan (``lsh_codes``), projecting every vector per
+    probe. A per-table scan-and-union would recompute the (possibly
+    expensive, e.g. embedding-UDF-backed) input once per table and need a
+    dedup shuffle."""
     dim = dim or len(query)
-    v = _as_double(embs, vec_col, id_col)
-    cond = None
-    for t in range(n_tables):
-        qb = _bucket_of(query, t, n_bits, dim, seed)
-        match_t = lsh_bucket_expr("v", dim, n_bits, t, seed) == F.lit(qb)
-        cond = match_t if cond is None else (cond | match_t)
-    cands = v.filter(cond)
+    cands = lsh_codes(embs, dim, n_bits, n_tables, seed, id_col, vec_col).filter(
+        lsh_probe(query, n_bits, n_tables, seed)
+    )
     return (
         cosine_scores(cands.withColumnRenamed("v", "embedding"), query, "id", "embedding")
         .orderBy(F.desc("score"), F.col("id"))
         .limit(k)
     )
-
-
-def _bucket_of(vec: list[float], table: int, n_bits: int, dim: int, seed: int) -> int:
-    out = 0
-    for b in range(n_bits):
-        h = hyperplane(seed, table, b, dim)
-        if sum(x * y for x, y in zip(vec, h)) >= 0:
-            out |= 1 << b
-    return out
 
 
 def ann_ivf(
@@ -325,20 +370,7 @@ def ann_ivf_batch(
         .select("query_id", "cid", "qv")
     )
     cands = assigned.join(F.broadcast(probe), "cid").select("query_id", "id", "v", "qv")
-    scored = cands.select(
-        "query_id", "id",
-        F.round(
-            F.expr("aggregate(zip_with(v, qv, (x, y) -> x * y), 0.0d, (a, x) -> a + x)")
-            / (F.expr(_norm_expr("v")) * F.expr(_norm_expr("qv"))),
-            4,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
+    return _topk_per_query(cands.select("query_id", "id", _cosine("v", "qv").alias("score")), k)
 
 
 def ann_pq(
@@ -481,14 +513,8 @@ def knn_graph(
                 [], "src string, dst string, score double, rank int"
             )
         dim = len(first[0])
-    v = _as_double(embs, vec_col, id_col)
-    tb = F.explode(F.array(*[
-        F.struct(F.lit(t).alias("t"),
-                 lsh_bucket_expr("v", dim, n_bits, t, seed).alias("bucket"))
-        for t in range(n_tables)
-    ])).alias("tb")
-    bucketed = v.select("id", "v", tb).select(
-        "id", "v", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket")
+    bucketed = lsh_codes(embs, dim, n_bits, n_tables, seed, id_col, vec_col).select(
+        "id", "v", F.posexplode("lsh").alias("t", "bucket")
     )
     rhs = bucketed.select(
         F.col("id").alias("dst"), F.col("v").alias("dv"), "t", "bucket"
@@ -499,13 +525,7 @@ def knn_graph(
         .select(
             F.col("id").alias("src"),
             "dst",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, dv, (x, y) -> x * y), 0.0d, (a, x) -> a + x)"
-                )
-                / (F.expr(_norm_expr("v")) * F.expr(_norm_expr("dv"))),
-                4,
-            ).alias("score"),
+            _cosine("v", "dv").alias("score"),
         )
         .distinct()
     )
@@ -632,13 +652,7 @@ def topk_mips(embs: DataFrame, query: list[float], k: int = 10,
     return (
         v.select(
             "id",
-            F.round(
-                F.expr(
-                    f"aggregate(zip_with(v, {qlit}, (x, y) -> x * y), "
-                    f"0.0d, (a, x) -> a + x)"
-                ),
-                4,
-            ).alias("dot"),
+            F.round(F.expr(_dot("v", qlit)), 4).alias("dot"),
         )
         .orderBy(F.desc("dot"), F.col("id"))
         .limit(k)

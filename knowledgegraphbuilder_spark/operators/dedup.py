@@ -339,20 +339,10 @@ def embedding_cosine_pairs_lsh(
     algorithm (bucketing included) replays value-exactly in the SQL oracle.
     Output: (id_a, id_b, cosine rounded 4dp) — equals the exact operator
     restricted to bucket-sharing pairs."""
-    from knowledgegraphbuilder_spark.operators.ann import lsh_bucket_expr
+    from knowledgegraphbuilder_spark.operators.ann import lsh_codes
 
-    v = embs.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-    )
-    bk = v.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("t"),
-                     lsh_bucket_expr("v", dim, n_bits, t, seed).alias("bucket"))
-            for t in range(n_tables)
-        ])).alias("tb"),
-    ).select("id", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"))
+    v = lsh_codes(embs, dim, n_bits, n_tables, seed, id_col, vec_col)
+    bk = v.select("id", F.posexplode("lsh").alias("t", "bucket"))
     cand = (
         bk.alias("x")
         .join(bk.alias("y"),

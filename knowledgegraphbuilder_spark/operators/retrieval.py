@@ -83,10 +83,35 @@ def embed_column(df: DataFrame, text_col: str, out_col: str = "embedding",
     return df.withColumn(out_col, emb(F.col(text_col)))
 
 
-def index_edges(edges: DataFrame, dim: int = 64) -> DataFrame:
-    """S10 analog: materialized (edge_id, description, embedding) table."""
-    return embed_column(
-        edges.select("edge_id", "description"), "description", "embedding", dim
+def index_edges(edges: DataFrame, dim: int = 64, config: KGConfig | None = None) -> DataFrame:
+    """S10 analog: materialized (edge_id, description, embedding, lsh) table.
+
+    ``lsh`` holds one LSH bucket id per table under ``config``'s
+    ``ann_bits``/``ann_tables`` — the index the reference builds once
+    (back/kgg/retriever.py:62-68). The codes are computed in the Arrow pass
+    that embeds the description (ann.lsh_code_matrix, bit-identical to
+    ann.lsh_bucket_expr on the stored float32 components) and tagged with
+    their parameters, so ann_lsh probes them with int compares and
+    re-derives them for a query under other parameters."""
+    from knowledgegraphbuilder_spark.operators.ann import lsh_code_matrix, lsh_params
+
+    cfg = config or KGConfig()
+    n_bits, n_tables = cfg.ann_bits, cfg.ann_tables
+    seed = 42  # the hyperplane seed retrieve_documents probes with (ann_lsh's default)
+
+    @F.pandas_udf("embedding array<float>, lsh array<int>")
+    def emb(texts: pd.Series) -> pd.DataFrame:
+        vecs = np.array([hash_embed_text(t or "", dim) for t in texts],
+                        dtype=np.float32).reshape(len(texts), dim)
+        codes = lsh_code_matrix(vecs, n_bits, n_tables, seed)
+        return pd.DataFrame({"embedding": list(vecs), "lsh": list(codes)})
+
+    meta = lsh_params(dim, n_bits, n_tables, seed, "embedding")
+    return (
+        edges.select("edge_id", "description")
+        .withColumn("e", emb(F.col("description")))
+        .select("edge_id", "description", "e.embedding",
+                F.col("e.lsh").alias("lsh", metadata=meta))
     )
 
 
@@ -102,10 +127,11 @@ def retrieve_documents(
     """Full QA retrieval: (doc_id, weight) top-k, reproducing retriever.py:62-94.
 
     The vector top-k probes the LSH buckets of the query (union over
-    ``cfg.ann_tables`` tables) and exact-rescores only the candidates — at
-    10^12 edges a brute-force scan of the edge-embedding table per query is
-    the one thing this stage must never do. ``use_lsh=False`` keeps the exact
-    scan as the small-scale test oracle."""
+    ``cfg.ann_tables`` tables) against the codes index_edges stored at index
+    time: ``ann_tables`` int compares per indexed edge and a cosine only per
+    candidate (an index without codes for ``cfg`` gets them derived in-plan,
+    a projection of every edge per question). ``use_lsh=False`` keeps the
+    exact scan as the small-scale test oracle."""
     from knowledgegraphbuilder_spark.operators.ann import ann_lsh
 
     cfg = config or KGConfig()
@@ -184,15 +210,15 @@ def retrieve_documents_batch(
     :func:`retrieve_documents` per row, executed as ONE plan.
 
     Scale shape: all query texts embed in one Arrow pass; the vector top-k
-    probes each query's LSH buckets via one (table, bucket) equi-join against
-    the bucketed edge index — the FAISS-probe analog
-    (back/kgg/retriever.py:62-68); at 10^12 edges a per-query full scan of
-    the index is the one thing this stage must never do
-    (``use_lsh=False`` keeps the exact batch scan as the small-scale
-    oracle). Per-query weighted graph views are an explicit (query_id, edge)
-    expansion — per-query edge weights are what G2 *means*, so the q-fold
-    state is inherent, but the iteration count stays max_iter Spark jobs
-    TOTAL via the query-keyed batched PPR instead of q independent loops.
+    probes each query's LSH buckets via one int (table, bucket) equi-join
+    against the edge index's stored codes, posexploded — the FAISS-probe
+    analog (back/kgg/retriever.py:62-68); cosine runs only on the matched
+    candidates (``use_lsh=False`` keeps the exact batch scan as the
+    small-scale oracle). Per-query weighted graph views are an explicit
+    (query_id, edge) expansion — per-query edge weights are what G2 *means*,
+    so the q-fold state is inherent, but the iteration count stays max_iter
+    Spark jobs TOTAL via the query-keyed batched PPR instead of q
+    independent loops.
     Tests pin batch == per-query singles."""
     from knowledgegraphbuilder_spark.operators.ann import (
         ann_lsh_batch,

@@ -410,7 +410,7 @@ def run_lsh_index_available_now(
     cross-batch shuffle."""
     from pyspark.sql import functions as F
 
-    from knowledgegraphbuilder_spark.operators.ann import _as_double, lsh_bucket_expr
+    from knowledgegraphbuilder_spark.operators.ann import lsh_codes
     from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
     stream = (
@@ -421,16 +421,10 @@ def run_lsh_index_available_now(
     )
 
     def process(batch_df, batch_id: int) -> None:
-        v = _as_double(batch_df, "embedding", "vec_id")
-        tb = F.explode(F.array(*[
-            F.struct(F.lit(t).alias("t"),
-                     lsh_bucket_expr("v", dim, n_bits, t, seed).alias("bucket"))
-            for t in range(n_tables)
-        ])).alias("tb")
-        idx = v.select("id", "v", tb).select(
-            F.concat_ws("|", "id", F.col("tb.t")).alias("ik"),
-            "id", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"), "v",
+        tb = lsh_codes(batch_df, dim, n_bits, n_tables, seed).select(
+            "id", "v", F.posexplode("lsh").alias("t", "bucket")
         )
+        idx = tb.select(F.concat_ws("|", "id", "t").alias("ik"), "id", "t", "bucket", "v")
         merge_upsert(batch_df.sparkSession, table_dir, idx, "ik")
 
     q = (
@@ -446,23 +440,18 @@ def probe_lsh_index(
     spark: SparkSession, table_dir: str, query: list, k: int = 10,
     n_bits: int = 4, n_tables: int = 8, seed: int = 42,
 ) -> "DataFrame":
-    """Query the streamed LSH index: one OR-of-bucket-equalities filter over
-    the slim index rows (never a corpus scan of raw embeddings), dedup to
-    one row per candidate id, exact cosine rescore, top-k. Output and values
-    match operators/ann.py:ann_lsh run over the full batch corpus — pinned
-    by the gate against the same SQL oracle."""
+    """Query the streamed LSH index: the OR-of-bucket-equalities filter of
+    operators/ann.py:ann_lsh (``lsh_probe``) over the slim (id, t, bucket)
+    index rows (never a corpus scan of raw embeddings), dedup to one row per
+    candidate id, exact cosine rescore, top-k. Output and values match
+    ann_lsh run over the full batch corpus — pinned by the gate against the
+    same SQL oracle."""
     from pyspark.sql import functions as F
 
-    from knowledgegraphbuilder_spark.operators.ann import _bucket_of, cosine_scores
+    from knowledgegraphbuilder_spark.operators.ann import cosine_scores, lsh_probe
 
-    idx = spark.read.parquet(table_dir)
-    dim = len(query)
-    cond = None
-    for t in range(n_tables):
-        qb = _bucket_of([float(x) for x in query], t, n_bits, dim, seed)
-        m = (F.col("t") == t) & (F.col("bucket") == qb)
-        cond = m if cond is None else (cond | m)
-    cands = idx.filter(cond).dropDuplicates(["id"]).select("id", "v")
+    cond = lsh_probe(query, n_bits, n_tables, seed, codes="bucket", table="t")
+    cands = spark.read.parquet(table_dir).filter(cond).dropDuplicates(["id"]).select("id", "v")
     return (
         cosine_scores(cands.withColumnRenamed("v", "embedding"), query, "id", "embedding")
         .orderBy(F.desc("score"), F.col("id"))

@@ -160,3 +160,60 @@ def test_batch_ppr_driver_equals_distributed(spark):
     assert set(drv) == set(dist)
     for key in drv:
         assert drv[key] == pytest.approx(dist[key], abs=1e-9)
+
+
+def test_stored_codes_rank_like_derived_codes(spark, kg):
+    """Retrieval over an index that stores its LSH codes == over the same
+    index with the codes dropped (derived in-plan) — single and batch."""
+    cfg = KGConfig()
+    idx = index_edges(kg.edges, cfg.embedding_dim, cfg).localCheckpoint()
+    bare = idx.drop("lsh")
+    queries = spark.createDataFrame(QUERIES[:2], "query_id string, query_text string")
+    for text in (QUERIES[0][1], QUERIES[1][1]):
+        got = retrieve_documents(kg.edges, kg.membership, idx, text, cfg).collect()
+        want = retrieve_documents(kg.edges, kg.membership, bare, text, cfg).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want] and got
+    got = retrieve_documents_batch(kg.edges, kg.membership, idx, queries, cfg)
+    want = retrieve_documents_batch(kg.edges, kg.membership, bare, queries, cfg)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_stale_codes_are_rederived(spark, kg):
+    """An index built under ann_bits=4 and queried with ann_bits=3 must not
+    probe its stored 4-bit codes: the ranking equals a freshly indexed
+    3-bit run."""
+    from knowledgegraphbuilder_spark.operators.ann import ann_lsh, lsh_codes
+    from knowledgegraphbuilder_spark.operators.retrieval import hash_embed_text
+
+    cfg4, cfg3 = KGConfig(ann_bits=4), KGConfig(ann_bits=3)
+    stale = index_edges(kg.edges, cfg4.embedding_dim, cfg4).localCheckpoint()
+    fresh = index_edges(kg.edges, cfg3.embedding_dim, cfg3).localCheckpoint()
+    text = QUERIES[0][1]
+    got = retrieve_documents(kg.edges, kg.membership, stale, text, cfg3).collect()
+    want = retrieve_documents(kg.edges, kg.membership, fresh, text, cfg3).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want] and got
+    # the probe itself: stale codes are re-derived, fresh ones are read
+    qv = hash_embed_text(text, cfg3.embedding_dim)
+    args = dict(dim=cfg3.embedding_dim, n_bits=3, n_tables=cfg3.ann_tables,
+                id_col="edge_id", vec_col="embedding")
+    assert (sorted(map(tuple, ann_lsh(stale, qv, 10, **args).collect()))
+            == sorted(map(tuple, ann_lsh(fresh, qv, 10, **args).collect())))
+    codes3 = lsh_codes(stale, cfg3.embedding_dim, 3, cfg3.ann_tables, id_col="edge_id")
+    assert max(b for r in codes3.select("lsh").collect() for b in r[0]) < 8
+
+
+def test_stored_code_probe_has_no_projection(spark, kg):
+    """The per-question probe over index_edges output filters on the stored
+    int codes: no aggregate/zip_with hyperplane term in its Filter."""
+    from knowledgegraphbuilder_spark.operators.ann import ann_lsh
+    from knowledgegraphbuilder_spark.operators.retrieval import hash_embed_text
+
+    cfg = KGConfig()
+    idx = index_edges(kg.edges, cfg.embedding_dim, cfg)
+    top = ann_lsh(idx, hash_embed_text(QUERIES[0][1], cfg.embedding_dim), 5,
+                  dim=cfg.embedding_dim, n_bits=cfg.ann_bits, n_tables=cfg.ann_tables,
+                  id_col="edge_id", vec_col="embedding")
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    filters = [ln for ln in plan.splitlines() if "Filter" in ln]
+    assert [ln for ln in filters if "lsh[7] = " in ln], plan
+    assert not any("aggregate(" in ln or "zip_with(" in ln for ln in filters), plan

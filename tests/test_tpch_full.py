@@ -126,3 +126,16 @@ def test_oracle_keys_cover_new_queries():
     for k in ("sql_tpch_q2", "sql_tpch_q9", "sql_tpch_q11", "sql_tpch_q12",
               "sql_tpch_q16", "sql_tpch_q20", "sql_tpch_q21"):
         assert k in oracles and "SELECT" in oracles[k].upper()
+
+
+@pytest.mark.parametrize("window", [
+    entry._R5_WINDOW[:-1] + ["no_such_query"],
+    entry._R5_WINDOW[:-1],
+    entry._R5_WINDOW[:-1] + entry._R5_WINDOW[:1],
+])
+def test_malformed_driver_window_raises(monkeypatch, window):
+    """queries() refuses a driver window that is not 50 distinct registered
+    names with an explicit error (an assert would vanish under python -O)."""
+    monkeypatch.setattr(entry, "_R5_WINDOW", window)
+    with pytest.raises(ValueError, match="_R5_WINDOW"):
+        entry.queries()

@@ -106,12 +106,14 @@ def main() -> None:
     qv = hash_embed_text("which customer stream uses spark", entry.CFG.embedding_dim)
     add(
         "ANN-LSH probe (the retrieval hot path)",
-        "ONE scan of the edge index with an OR-of-bucket-equalities Filter "
-        "ahead of any scoring: only vectors landing in the query's bucket in "
-        "some table are cosine-rescored, then TakeOrderedAndProject — at "
-        "10^12 edges the per-query cost is the probed buckets, never the "
-        "full index (brute force remains only the test oracle).",
-        ann_lsh(index_edges(kg.edges, entry.CFG.embedding_dim), qv, 5,
+        "The edge codes (`lsh`, one bucket id per table) are computed once, "
+        "at index time, in the same ArrowEvalPython pass that embeds the "
+        "descriptions. The probe is ONE scan of the index with an "
+        "OR-of-int-equalities Filter on those stored codes (`lsh[t] = qb_t`, "
+        "no hyperplane projection) ahead of any scoring: only vectors landing "
+        "in the query's bucket in some table are cosine-rescored, then "
+        "TakeOrderedAndProject (brute force remains only the test oracle).",
+        ann_lsh(index_edges(kg.edges, entry.CFG.embedding_dim, entry.CFG), qv, 5,
                 n_bits=entry.CFG.ann_bits, n_tables=entry.CFG.ann_tables,
                 id_col="edge_id", vec_col="embedding"),
     )
@@ -127,13 +129,15 @@ def main() -> None:
                          entry.CFG.embedding_dim, dtype=DoubleType())
     add(
         "Batched ANN-LSH probe (multi-query retrieval hot path)",
-        "The corpus is scanned ONCE emitting (table, bucket) rows; the tiny "
-        "query-bucket table broadcasts and candidates come from a "
-        "BroadcastHashJoin on (table, bucket) — no CartesianProduct or "
-        "BroadcastNestedLoopJoin of corpus x queries anywhere in the plan "
-        "(pinned by tests/test_batch_retrieval.py). Exact cosine rescoring "
-        "touches only the bucket-matched candidates.",
-        ann_lsh_batch(index_edges(kg.edges, entry.CFG.embedding_dim), q_emb, 5,
+        "The corpus is scanned ONCE, posexploding each edge's stored codes "
+        "(computed at index time in the embedding Arrow pass) into int "
+        "(table, bucket) rows; only the tiny query table is bucketed in-plan. "
+        "It broadcasts and candidates come from a BroadcastHashJoin on "
+        "(table, bucket) — no CartesianProduct or BroadcastNestedLoopJoin of "
+        "corpus x queries anywhere in the plan (pinned by "
+        "tests/test_batch_retrieval.py). Exact cosine rescoring touches only "
+        "the bucket-matched candidates.",
+        ann_lsh_batch(index_edges(kg.edges, entry.CFG.embedding_dim, entry.CFG), q_emb, 5,
                       dim=entry.CFG.embedding_dim, n_bits=entry.CFG.ann_bits,
                       n_tables=entry.CFG.ann_tables,
                       id_col="edge_id", vec_col="embedding"),
