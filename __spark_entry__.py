@@ -1445,7 +1445,7 @@ def q_stream_edges(spark, sf_dir):
 def q_stream_ann(spark, sf_dir):
     """STREAMING ANN-index maintenance under the value-exact gate: the
     embedding corpus arrives as three vec_id-range files, each micro-batch
-    replace-MERGEs its deterministic LSH bucket rows into the persistent
+    replace-MERGEs its vectors' deterministic LSH codes into the persistent
     index (streaming/ingest.py:run_lsh_index_available_now), the whole input
     then REPLAYS against a fresh checkpoint (bucket assignment is a pure
     per-row function, so the MERGE is idempotent and the index is

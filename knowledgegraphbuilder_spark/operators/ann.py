@@ -222,20 +222,14 @@ def lsh_codes(
     ]))
 
 
-def lsh_probe(query: list[float], n_bits: int, n_tables: int, seed: int = 42,
-              codes: str = "lsh", table: str | None = None) -> F.Column:
-    """Candidate predicate for one query vector: a row matches iff its code
-    equals the query's in ANY table — int compares only. ``codes`` is an
-    array<int> column (one code per table), or with ``table`` an int code
-    column of (row, table) rows."""
+def lsh_probe(query: list[float], n_bits: int, n_tables: int, seed: int = 42) -> F.Column:
+    """Candidate predicate for one query vector over the ``lsh`` array<int>
+    column (one code per table, as ``lsh_codes`` emits): a row matches iff
+    its code equals the query's in ANY table — int compares only."""
     qb = lsh_code_matrix([[float(x) for x in query]], n_bits, n_tables, seed)[0]
-
-    def hit(t: int, b: int) -> F.Column:
-        if table is None:
-            return F.col(codes)[t] == b
-        return (F.col(table) == t) & (F.col(codes) == b)
-
-    return functools.reduce(operator.or_, (hit(t, int(b)) for t, b in enumerate(qb)))
+    return functools.reduce(
+        operator.or_, (F.col("lsh")[t] == int(b) for t, b in enumerate(qb))
+    )
 
 
 def ann_lsh(

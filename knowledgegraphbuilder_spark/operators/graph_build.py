@@ -6,9 +6,10 @@ relation id (:281). Neo4j property shapes (back/kgg/io/graph.py:68-86):
 ``(:Node {id, text})-[:Edge {id, relation_id, rel_type, description,
 weight=0.2}]->(:Node)`` — the default edge weight 0.2 is io/graph.py:77.
 
-Spark design: J2 is two equi joins on surface text. At sandbox/bench scale the
-node-key projection is tiny (broadcast); at 10^12 scale pass
-``broadcast_nodes=False`` and AQE picks a sort-merge join with skew split.
+Spark design: J2 is two equi joins on surface text. The node-key projection
+is always broadcast, which suits the sandbox/bench scale where it is tiny; at
+10^12 scale it would not fit, and ROADMAP O5 will let measured sizes pick the
+join strategy instead of this fixed hint.
 Per-row Neo4j round-trips (S6/S7 anti-pattern) become bulk table writes.
 """
 
@@ -20,12 +21,9 @@ from pyspark.sql.window import Window
 
 
 def build_edges(
-    relations: DataFrame, nodes: DataFrame, default_weight: float = 0.2,
-    broadcast_nodes: bool = True,
+    relations: DataFrame, nodes: DataFrame, default_weight: float = 0.2
 ) -> DataFrame:
-    keys = nodes.select("node_id", "text")
-    if broadcast_nodes:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(nodes.select("node_id", "text"))
     heads = keys.select(F.col("text").alias("head_text"), F.col("node_id").alias("head_node_id"))
     tails = keys.select(F.col("text").alias("tail_text"), F.col("node_id").alias("tail_node_id"))
     return (
@@ -47,12 +45,10 @@ def build_edges(
     )
 
 
-def build_triples(edges: DataFrame, nodes: DataFrame, broadcast_nodes: bool = True) -> DataFrame:
+def build_triples(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """(subj, pred, obj) = (head node text, rel_type, tail node text) — the
     parity surface checked against the reference at P/R >= 0.95."""
-    keys = nodes.select("node_id", "text")
-    if broadcast_nodes:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(nodes.select("node_id", "text"))
     return (
         edges.join(keys.select(F.col("node_id").alias("head_node_id"),
                                F.col("text").alias("subj")), "head_node_id")

@@ -110,14 +110,8 @@ def extract_relations(
     mentions: DataFrame,
     config: KGConfig,
     backend: object | None = None,
-    barrier=None,
 ) -> DataFrame:
-    """RE-chunk table + mention table -> deduplicated relation table.
-
-    ``barrier`` (df -> df, e.g. ``lambda df: df.localCheckpoint()``) is
-    applied to the inference output: everything upstream of it (chunker +
-    backend UDFs) is the expensive recompute-prone part, everything below is
-    cheap native ops. The pipeline passes it when materialization is on."""
+    """RE-chunk table + mention table -> deduplicated relation table."""
     joined = chunk_mention_join(chunks, mentions)
 
     # A8: per-chunk sorted entity list + prompt block
@@ -157,8 +151,6 @@ def extract_relations(
             yield pdf[["doc_id", "chunk_idx", "response"]]
 
     responses = gated.mapInPandas(run, "doc_id string, chunk_idx int, response string")
-    if barrier is not None:
-        responses = barrier(responses)
 
     # F3 + P3 + F5: fence extract, guard, JSON parse, ordered explode.
     # The reference uses re.search(r'```json\s*(.*?)\s*```', DOTALL)

@@ -4,9 +4,15 @@ The Spark-native generalization of the reference's whole-graph JSON cache
 (back/kgg/generator.py:42-53,76-122): instead of one opaque cache file, every
 stage writes a parquet checkpoint table (stands in for an Iceberg table in
 the sandbox — same createOrReplace semantics, minus snapshot isolation) plus
-per-partition lineage rows. A stage whose checkpoint exists is skipped on
-resume; because every id is content-hashed (functions/ids.py), a resumed run
-produces byte-identical triples — uuid4 (reference) could not.
+per-partition lineage rows. The stage graph itself is declared once in
+plans/pipeline.py (``build_graph``); this runner is its durable policy.
+
+A stage whose checkpoint exists is skipped on resume. Checkpoints live at
+``{work_dir}/{stage}/{fingerprint}`` (``stage_fingerprint``), so a resume
+under a different config or backend recomputes instead of reusing stale
+mentions or relations. Because every id is content-hashed
+(functions/ids.py), a resumed run produces byte-identical triples — uuid4
+(reference) could not.
 
 Lineage rows: (run_id, stage, partition_id, n_rows, wall_s, ts) — wall_s is
 stage wall clock (per-partition timing would need accumulators; row counts
@@ -15,6 +21,8 @@ are per physical partition).
 
 from __future__ import annotations
 
+import dataclasses
+import hashlib
 import json
 import time
 import uuid
@@ -23,20 +31,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knowledgegraphbuilder_spark.config import KGConfig
-from knowledgegraphbuilder_spark.operators.canonicalize import (
-    cluster_mentions_exact,
-    node_membership,
-)
-from knowledgegraphbuilder_spark.operators.chunk import chunk_documents
-from knowledgegraphbuilder_spark.operators.flatten import flatten_documents
-from knowledgegraphbuilder_spark.operators.graph_build import (
-    build_edges,
-    build_provenance,
-    build_triples,
-)
-from knowledgegraphbuilder_spark.operators.ner import extract_mentions
-from knowledgegraphbuilder_spark.operators.relations import extract_relations
-from knowledgegraphbuilder_spark.plans.pipeline import KGResult
+from knowledgegraphbuilder_spark.operators.ner import GazetteerExtractor
+from knowledgegraphbuilder_spark.operators.relations import TemplateRelationBackend
+from knowledgegraphbuilder_spark.plans.pipeline import KGResult, build_graph
+
+
+def stage_fingerprint(
+    cfg: KGConfig, ner_backend: object | None, re_backend: object | None
+) -> str:
+    """First 16 hex chars of a sha256 over what a stage's output depends on
+    besides its input spans: the whole config (sorted JSON) and the NER/RE
+    backend classes (``None`` stands for the default backend). Only the class
+    identifies a backend; a backend whose output depends on its own
+    constructor arguments must be given a fresh ``work_dir`` per setting."""
+
+    def cls(backend: object | None, default: type) -> str:
+        t = default if backend is None else type(backend)
+        return f"{t.__module__}.{t.__qualname__}"
+
+    blob = json.dumps(
+        {
+            "config": dataclasses.asdict(cfg),
+            "ner": cls(ner_backend, GazetteerExtractor),
+            "re": cls(re_backend, TemplateRelationBackend),
+        },
+        sort_keys=True,
+    )
+    return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
 class CheckpointedPipeline:
@@ -53,13 +74,14 @@ class CheckpointedPipeline:
         self.cfg = config or KGConfig()
         self.ner_backend = ner_backend
         self.re_backend = re_backend
+        self.fingerprint = stage_fingerprint(self.cfg, ner_backend, re_backend)
         self.run_id = uuid.uuid4().hex[:12]
         self.stage_log: list[dict] = []
 
-    # -- checkpoint mechanics ------------------------------------------------
-
     def _path(self, stage: str) -> str:
-        return f"{self.work_dir}/{stage}"
+        """A checkpoint built under another config or backend lives under
+        another fingerprint, so ``_done`` never finds it."""
+        return f"{self.work_dir}/{stage}/{self.fingerprint}"
 
     def _hadoop_path(self, path: str):
         """Resolve through the Hadoop FileSystem API so checkpoint probing and
@@ -110,51 +132,11 @@ class CheckpointedPipeline:
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.work_dir}/_lineage")
 
-    # -- the pipeline --------------------------------------------------------
-
     def run(self, spans_df: DataFrame, force: bool = False) -> KGResult:
-        cfg = self.cfg
-        docs = self._stage("s1_documents", lambda: flatten_documents(spans_df), force)
-        ner_chunks = self._stage(
-            "s2_ner_chunks",
-            lambda: chunk_documents(docs, cfg.ner_chunk_size, cfg.ner_chunk_overlap),
-            force,
+        res = build_graph(
+            spans_df, self.cfg, self.ner_backend, self.re_backend,
+            lambda name, make, pin: self._stage(name, make, force),
         )
-        mentions = self._stage(
-            "s4_mentions",
-            lambda: extract_mentions(ner_chunks, cfg, backend=self.ner_backend),
-            force,
-        )
-        re_chunks = self._stage(
-            "s2_re_chunks",
-            lambda: chunk_documents(docs, cfg.re_chunk_size, cfg.re_chunk_overlap),
-            force,
-        )
-        relations = self._stage(
-            "s5_relations",
-            lambda: extract_relations(re_chunks, mentions, cfg, backend=self.re_backend),
-            force,
-        )
-        nodes = self._stage(
-            "s7_nodes",
-            lambda: cluster_mentions_exact(mentions, cfg, with_member_arrays=False),
-            force,
-        )
-        membership = self._stage("s7_membership", lambda: node_membership(mentions), force)
-        edges = self._stage(
-            "s8_edges", lambda: build_edges(relations, nodes, cfg.default_edge_weight), force
-        )
-        triples = self._stage("s9_triples", lambda: build_triples(edges, nodes), force)
-        provenance = self._stage("s9_provenance", lambda: build_provenance(relations), force)
         with open(f"{self.work_dir}/_run_{self.run_id}.json", "w") as f:
             json.dump(self.stage_log, f)
-        return KGResult(
-            documents=docs,
-            mentions=mentions,
-            relations=relations,
-            nodes=nodes,
-            membership=membership,
-            edges=edges,
-            triples=triples,
-            provenance=provenance,
-        )
+        return res

@@ -8,6 +8,13 @@ semantics in the sandbox) written in bulk, and the MERGE-style upsert
 (S8, nodes/neo4j_loader.py:34-51) becomes a keyed anti-join + union rewrite —
 the parquet-level equivalent of ``MERGE INTO graph.edges USING updates ON
 edge_id``.
+
+Local filesystem only: ``write_graph``, ``read_graph``, ``_commit_table``
+and the ``merge_*`` functions probe with ``os.path`` and commit with
+``os.rename``, so every ``base_dir``/``table_dir`` must be a local (or
+locally mounted) path, not an hdfs:// or s3a:// URI. The rename swap is
+crash-safe only where ``os.rename`` of a directory is atomic. The checkpoint
+runner (plans/checkpoint.py) probes through the Hadoop FS API instead.
 """
 
 from __future__ import annotations

@@ -395,9 +395,9 @@ def run_lsh_index_available_now(
     schema: str = "vec_id long, embedding array<float>",
 ) -> None:
     """Streaming ANN-index maintenance: each embedding micro-batch computes
-    its deterministic LSH bucket rows (one per table, same sha256-derived
+    its deterministic LSH codes (one bucket id per table, same sha256-derived
     hyperplanes as operators/ann.py) and replace-MERGEs them into the
-    persistent index keyed by (vec_id, table). Bucket assignment is a pure
+    persistent index keyed by vector id. Bucket assignment is a pure
     per-row function of the vector, so the MERGE is idempotent — replays,
     re-checkpoints, and any batch boundary produce a byte-identical index,
     and the streamed index EQUALS the batch-built index row for row. That is
@@ -405,11 +405,9 @@ def run_lsh_index_available_now(
     flow in continuously, and probes (probe_lsh_index) see them as soon as
     their batch commits.
 
-    State is #vectors x n_tables slim rows in a keyed table (id, t, bucket,
-    v); per batch the work is one projection + a bounded MERGE — no
-    cross-batch shuffle."""
-    from pyspark.sql import functions as F
-
+    State is one (id, v, lsh) row per vector, the ``lsh_codes`` shape
+    ann_lsh probes; per batch the work is one projection + a bounded MERGE —
+    no cross-batch shuffle."""
     from knowledgegraphbuilder_spark.operators.ann import lsh_codes
     from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
@@ -421,11 +419,8 @@ def run_lsh_index_available_now(
     )
 
     def process(batch_df, batch_id: int) -> None:
-        tb = lsh_codes(batch_df, dim, n_bits, n_tables, seed).select(
-            "id", "v", F.posexplode("lsh").alias("t", "bucket")
-        )
-        idx = tb.select(F.concat_ws("|", "id", "t").alias("ik"), "id", "t", "bucket", "v")
-        merge_upsert(batch_df.sparkSession, table_dir, idx, "ik")
+        idx = lsh_codes(batch_df, dim, n_bits, n_tables, seed)
+        merge_upsert(batch_df.sparkSession, table_dir, idx, "id")
 
     q = (
         stream.writeStream.foreachBatch(process)
@@ -441,17 +436,16 @@ def probe_lsh_index(
     n_bits: int = 4, n_tables: int = 8, seed: int = 42,
 ) -> "DataFrame":
     """Query the streamed LSH index: the OR-of-bucket-equalities filter of
-    operators/ann.py:ann_lsh (``lsh_probe``) over the slim (id, t, bucket)
-    index rows (never a corpus scan of raw embeddings), dedup to one row per
-    candidate id, exact cosine rescore, top-k. Output and values match
-    ann_lsh run over the full batch corpus — pinned by the gate against the
-    same SQL oracle."""
+    operators/ann.py:ann_lsh (``lsh_probe``) over the stored per-vector codes
+    (never a re-projection of raw embeddings), exact cosine rescore, top-k.
+    Output and values match ann_lsh run over the full batch corpus — pinned
+    by the gate against the same SQL oracle."""
     from pyspark.sql import functions as F
 
     from knowledgegraphbuilder_spark.operators.ann import cosine_scores, lsh_probe
 
-    cond = lsh_probe(query, n_bits, n_tables, seed, codes="bucket", table="t")
-    cands = spark.read.parquet(table_dir).filter(cond).dropDuplicates(["id"]).select("id", "v")
+    cond = lsh_probe(query, n_bits, n_tables, seed)
+    cands = spark.read.parquet(table_dir).filter(cond).select("id", "v")
     return (
         cosine_scores(cands.withColumnRenamed("v", "embedding"), query, "id", "embedding")
         .orderBy(F.desc("score"), F.col("id"))

@@ -39,7 +39,6 @@ def main() -> None:
         "--resume", action=argparse.BooleanOptionalAction, default=True,
         help="reuse existing stage checkpoints (--no-resume recomputes all)",
     )
-    ap.add_argument("--force", action="store_true")
     ap.add_argument("--query")
     ap.add_argument("--parallelism", type=int, default=None)
     args = ap.parse_args()
@@ -52,7 +51,7 @@ def main() -> None:
 
     t0 = time.time()
     pipe = CheckpointedPipeline(spark, args.work_dir, KGConfig())
-    res = pipe.run(spans, force=args.force or not args.resume)
+    res = pipe.run(spans, force=not args.resume)
     write_graph(
         args.output,
         nodes=res.nodes, edges=res.edges, provenance=res.provenance,

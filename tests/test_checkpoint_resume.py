@@ -2,8 +2,13 @@
 mid-pipeline stage recomputes downstream to byte-identical triples
 (BASELINE.json north rule)."""
 
+import pytest
+
 from knowledgegraphbuilder_spark.config import KGConfig
 from knowledgegraphbuilder_spark.plans.checkpoint import CheckpointedPipeline
+from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+
+from tests import oracle_serial as oracle
 
 
 def _triples(res):
@@ -33,6 +38,47 @@ def test_checkpoint_resume_idempotent(spark, corpus_df, tmp_path_factory):
     flags = {s["stage"]: s["resumed"] for s in p3.stage_log}
     assert flags["s4_mentions"] and not flags["s5_relations"] and not flags["s9_triples"]
     assert _triples(r3) == t1
+
+
+def test_resume_under_changed_config_recomputes(spark, corpus_df, tmp_path):
+    """A checkpoint built under one config is never reused under another."""
+    wd = str(tmp_path / "ckpt")
+    CheckpointedPipeline(spark, wd, KGConfig()).run(corpus_df)
+
+    cfg = KGConfig(ner_chunk_size=50, ner_chunk_overlap=10)
+    p2 = CheckpointedPipeline(spark, wd, cfg)
+    r2 = p2.run(corpus_df)
+    assert len(p2.stage_log) == 10
+    assert not any(s["resumed"] for s in p2.stage_log)
+    assert _triples(r2) == _triples(run_pipeline(corpus_df, cfg))
+
+    p3 = CheckpointedPipeline(spark, wd, cfg)
+    r3 = p3.run(corpus_df)
+    assert all(s["resumed"] for s in p3.stage_log)
+    assert _triples(r3) == _triples(r2)
+
+
+@pytest.mark.parametrize("policy", ["none", "ckpt", "durable"])
+def test_every_policy_builds_the_same_graph(spark, corpus, corpus_df, tmp_path, policy):
+    """Lazy, eagerly pinned and durable runs of the one stage graph all
+    produce the serial oracle's graph: same triple rows, same table sizes."""
+    if policy == "durable":
+        res = CheckpointedPipeline(spark, str(tmp_path / "ckpt"), KGConfig()).run(corpus_df)
+    else:
+        res = run_pipeline(corpus_df, KGConfig(), materialize=policy)
+    golden = oracle.run_oracle(corpus)
+    n_mentions, n_relations = len(golden["mentions"]), len(golden["relations"])
+    counts = {name: getattr(res, name).count() for name in (
+        "mentions", "relations", "nodes", "membership", "edges", "provenance")}
+    assert counts == {
+        "mentions": n_mentions, "relations": n_relations,
+        "nodes": len(golden["nodes"]), "membership": n_mentions,
+        "edges": n_relations, "provenance": n_relations,
+    }
+    assert _triples(res) == sorted(
+        (r["head_text"], r["rel_type"], r["tail_text"], r["doc_id"], r["relation_id"])
+        for r in golden["relations"]
+    )
 
 
 def test_lineage_rows(spark, corpus_df, tmp_path_factory):

@@ -211,12 +211,12 @@ def test_stream_lsh_index_equals_batch_and_is_replay_idempotent(spark, tmp_path)
          .coalesce(1).write.mode("overwrite").parquet(f"{base}/in/b{i}"))
     run_lsh_index_available_now(spark, f"{base}/in/*", f"{base}/idx", f"{base}/ck")
     idx1 = sorted(map(tuple, spark.read.parquet(f"{base}/idx")
-                      .select("ik", "bucket").collect()))
+                      .select("id", "lsh").collect()))
     # full replay against a fresh checkpoint: byte-identical index
     run_lsh_index_available_now(spark, f"{base}/in/*", f"{base}/idx", f"{base}/ck2")
     idx2 = sorted(map(tuple, spark.read.parquet(f"{base}/idx")
-                      .select("ik", "bucket").collect()))
-    assert idx1 == idx2 and len(idx1) == 30 * 8
+                      .select("id", "lsh").collect()))
+    assert idx1 == idx2 and len(idx1) == 30 and len({i for i, _ in idx1}) == 30
     # probe over the streamed index == batch ann_lsh over the full corpus
     q = rows[0][1]
     got = sorted(map(tuple, probe_lsh_index(spark, f"{base}/idx", q, k=5).collect()))
