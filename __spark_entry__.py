@@ -12541,16 +12541,14 @@ def oracle_sql() -> dict[str, str]:
         WHERE rel_type NOT IN ('technology_near_organization',
                                'organization_near_technology')
     """
-    # DBSCAN replay: quadratic eps-ball (oracle-side only; the operator
-    # is grid-bucketed), recursive min-reach closure over core edges,
-    # min-cluster border pin
+    # DBSCAN replay over the operator's unshifted milli-unit coordinates:
+    # quadratic eps-ball (oracle-side only; the operator is grid-bucketed),
+    # recursive min-reach closure over core edges, min-cluster border pin
     o["ml_dbscan"] = """
         WITH RECURSIVE p AS (
           SELECT CAST(vec_id AS VARCHAR) AS id,
-                 CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000) AS BIGINT)
-                   + 4096 AS x,
-                 CAST(floor(CAST(embedding[2] AS DOUBLE) * 1000) AS BIGINT)
-                   + 4096 AS y
+                 CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000) AS BIGINT) AS x,
+                 CAST(floor(CAST(embedding[2] AS DOUBLE) * 1000) AS BIGINT) AS y
           FROM embeddings
         ),
         nbrs AS MATERIALIZED (

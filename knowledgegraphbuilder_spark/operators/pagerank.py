@@ -28,28 +28,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _driver_ppr(edge_rows, source_ids, damping, max_iter, tol):
-    """Vectorized driver-side power iteration — same update rule as the
-    distributed loop. O(E) per iteration via np.add.at; for graphs that fit
-    on the driver, 100 iterations cost milliseconds instead of 100 Spark
-    jobs."""
+def ppr_arrays(head, tail, w, n, sources, damping, max_iter, tol):
+    """The update rule as a vectorized driver-side power iteration over
+    vertex-index arrays: ``head``/``tail`` index the ``n`` vertices, ``w`` is
+    the per-edge weight, ``sources`` the personalization vertex indices (mass
+    1/len(sources) each). O(E) per iteration via np.add.at; for graphs that
+    fit on the driver, 100 iterations cost milliseconds instead of 100 Spark
+    jobs. Returns the rank vector."""
     import numpy as np
 
-    verts = sorted({v for e in edge_rows for v in (e[0], e[1])} | set(source_ids))
-    idx = {v: i for i, v in enumerate(verts)}
-    n = len(verts)
-    src = np.fromiter((idx[e[0]] for e in edge_rows), dtype=np.int64, count=len(edge_rows))
-    dst = np.fromiter((idx[e[1]] for e in edge_rows), dtype=np.int64, count=len(edge_rows))
-    w = np.fromiter((float(e[2]) for e in edge_rows), dtype=np.float64, count=len(edge_rows))
     # symmetrize (undirected)
-    src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    src, dst = np.concatenate([head, tail]), np.concatenate([tail, head])
     w = np.concatenate([w, w])
     out_w = np.zeros(n)
     np.add.at(out_w, src, w)
     tw = w / out_w[src]
     p = np.zeros(n)
-    for s in source_ids:
-        p[idx[s]] = 1.0 / len(source_ids)
+    p[sources] = 1.0 / len(sources)
     r = p.copy()
     for _ in range(max_iter):
         contrib = np.zeros(n)
@@ -60,7 +55,23 @@ def _driver_ppr(edge_rows, source_ids, damping, max_iter, tol):
         r = r_new
         if delta < tol:
             break
-    return [(v, float(r[idx[v]])) for v in verts]
+    return r
+
+
+def _driver_ppr(edge_rows, source_ids, damping, max_iter, tol):
+    """:func:`ppr_arrays` over (head id, tail id, weight) rows and source
+    ids -> [(vertex id, score)] over the sorted vertex ids."""
+    import numpy as np
+
+    verts = sorted({v for e in edge_rows for v in (e[0], e[1])} | set(source_ids))
+    idx = {v: i for i, v in enumerate(verts)}
+    n_e = len(edge_rows)
+    head = np.fromiter((idx[e[0]] for e in edge_rows), dtype=np.int64, count=n_e)
+    tail = np.fromiter((idx[e[1]] for e in edge_rows), dtype=np.int64, count=n_e)
+    w = np.fromiter((float(e[2]) for e in edge_rows), dtype=np.float64, count=n_e)
+    r = ppr_arrays(head, tail, w, len(verts), [idx[s] for s in source_ids],
+                   damping, max_iter, tol)
+    return [(v, float(r[i])) for i, v in enumerate(verts)]
 
 
 def personalized_pagerank_batch(

@@ -137,6 +137,12 @@ class CheckpointedPipeline:
             spans_df, self.cfg, self.ner_backend, self.re_backend,
             lambda name, make, pin: self._stage(name, make, force),
         )
-        with open(f"{self.work_dir}/_run_{self.run_id}.json", "w") as f:
-            json.dump(self.stage_log, f)
+        # through the Hadoop FS API, like the stages: a URI work_dir has no
+        # local path for open()
+        fs, jpath = self._hadoop_path(f"{self.work_dir}/_run_{self.run_id}.json")
+        out = fs.create(jpath, True)
+        try:
+            out.write(json.dumps(self.stage_log).encode())
+        finally:
+            out.close()
         return res

@@ -151,3 +151,22 @@ def test_compact_batched_state_preserves_fused_read(spark, tmp_path):
     compact_batched_state(spark, st, ["subj", "pred", "obj"],
                           ["k_a", "k_b"])
     assert {tuple(r) for r in read_fused(spark, st).collect()} == before
+
+
+def test_file_uri_work_dir_runs_and_resumes(spark, corpus_df, tmp_path):
+    """A work_dir given as a URI: the run record goes through the same
+    filesystem as the stages, and a second run resumes every stage."""
+    import json
+
+    wd = (tmp_path / "ckpt").as_uri()
+    p1 = CheckpointedPipeline(spark, wd, KGConfig())
+    t1 = _triples(p1.run(corpus_df))
+    assert len(p1.stage_log) == 10
+    with open(tmp_path / "ckpt" / f"_run_{p1.run_id}.json") as f:
+        assert json.load(f) == p1.stage_log
+
+    p2 = CheckpointedPipeline(spark, wd, KGConfig())
+    t2 = _triples(p2.run(corpus_df))
+    assert len(p2.stage_log) == 10
+    assert all(s["resumed"] for s in p2.stage_log)
+    assert t2 == t1
