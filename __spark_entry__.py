@@ -1041,7 +1041,7 @@ def q_kg_incremental(spark, sf_dir):
     from knowledgegraphbuilder_spark.operators.flatten import flatten_documents
     from knowledgegraphbuilder_spark.operators.ner import extract_mentions
     from knowledgegraphbuilder_spark.operators.relations import extract_relations
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
+    from knowledgegraphbuilder_spark.sources.sinks import merge
 
     spans = _spans_cached(spark, sf_dir)
     tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:10]
@@ -1061,7 +1061,7 @@ def q_kg_incremental(spark, sf_dir):
             chunk_documents(docs, CFG.re_chunk_size, CFG.re_chunk_overlap),
             mentions, CFG,
         )
-        merge_upsert(spark, f"{base}/out", rels, "relation_id")
+        merge(spark, f"{base}/out", rels, "relation_id", "replace")
 
     half = (n + 1) // 2
     lo = spans.filter(

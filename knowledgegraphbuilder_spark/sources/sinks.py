@@ -5,12 +5,20 @@ per edge (back/kgg/io/graph.py:58-95 — the anti-pattern SURVEY.md §4.1 bans)
 and caches the whole graph as one JSON file (generator.py:76-96). Here every
 graph table is a partitioned parquet dataset (Iceberg createOrReplace
 semantics in the sandbox) written in bulk, and the MERGE-style upsert
-(S8, nodes/neo4j_loader.py:34-51) becomes a keyed anti-join + union rewrite —
-the parquet-level equivalent of ``MERGE INTO graph.edges USING updates ON
-edge_id``.
+(S8, nodes/neo4j_loader.py:34-51) becomes one keyed rewrite,
+``merge(spark, table_dir, updates, keys, combine)``, whose ``combine``
+names the Iceberg ``MERGE INTO t USING s ON <keys>`` it stands for:
+
+- ``"replace"``: ``WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
+  INSERT *`` (anti-join + union);
+- ``"keep"``: ``WHEN NOT MATCHED THEN INSERT *`` only, first wins
+  (anti-join the updates + union);
+- ``"max"`` / ``"min"`` / ``"bit_or"``: ``WHEN MATCHED THEN UPDATE SET
+  v = max(t.v, s.v)`` (resp. min, ``t.v | s.v``) ``WHEN NOT MATCHED THEN
+  INSERT *`` (union + re-aggregate per key) — the sketch-register folds.
 
 Local filesystem only: ``write_graph``, ``read_graph``, ``_commit_table``
-and the ``merge_*`` functions probe with ``os.path`` and commit with
+and ``merge`` probe with ``os.path`` and commit with
 ``os.rename``, so every ``base_dir``/``table_dir`` must be a local (or
 locally mounted) path, not an hdfs:// or s3a:// URI. The rename swap is
 crash-safe only where ``os.rename`` of a directory is atomic. The checkpoint
@@ -110,34 +118,42 @@ def _commit_table(merged: DataFrame, table_dir: str,
     shutil.rmtree(old, ignore_errors=True)
 
 
-def merge_upsert(spark: SparkSession, table_dir: str, updates: DataFrame,
-                 key: str) -> None:
-    """S8: idempotent MERGE by key — existing rows not in updates are kept,
-    matching keys are replaced. (With Iceberg this is a single MERGE INTO;
-    on raw parquet it is anti-join + union + a crash-safe rename commit.)"""
+def merge(spark: SparkSession, table_dir: str, updates: DataFrame,
+          keys: str | list[str], combine: str) -> None:
+    """S8: idempotent keyed MERGE of ``updates`` into the parquet table at
+    ``table_dir`` (created from ``updates`` when absent), committed through
+    the crash-safe rename swap after recovering any earlier crash.
+
+    ``combine`` decides what a key present on both sides keeps:
+    ``"replace"`` the update rows (anti-join the table on the update keys,
+    union the updates), ``"keep"`` the table rows (insert only missing
+    keys, first wins), or ``"max"`` / ``"min"`` / ``"bit_or"`` the SQL
+    aggregate of every non-key column over the union of both sides. All
+    five are idempotent, so replaying a batch leaves the table
+    byte-identical; a non-idempotent aggregate such as ``sum`` would
+    double-count replays and is refused. The aggregates re-group the union
+    instead of joining with greatest()/least(), which skip NULLs."""
+    if combine not in ("replace", "keep", "max", "min", "bit_or"):
+        raise ValueError(f"unknown merge combine {combine!r}")
+    keys = [keys] if isinstance(keys, str) else list(keys)
     _recover_table(table_dir)
-    if os.path.exists(os.path.join(table_dir, "_SUCCESS")):
-        current = spark.read.parquet(table_dir)
-        kept = current.join(updates.select(key).distinct(), key, "left_anti")
-        merged = kept.unionByName(updates)
-    else:
+    if not os.path.exists(os.path.join(table_dir, "_SUCCESS")):
         merged = updates
-    _commit_table(merged, table_dir)
-
-
-def merge_insert_missing(spark: SparkSession, table_dir: str,
-                         updates: DataFrame, key: str) -> None:
-    """First-wins MERGE by key: existing rows are kept untouched, update
-    rows are inserted only for keys not yet in the table (the Iceberg
-    `MERGE INTO ... WHEN NOT MATCHED THEN INSERT` shape). Replaying the same
-    updates is a no-op — the primitive streaming dedup builds on."""
-    _recover_table(table_dir)
-    if os.path.exists(os.path.join(table_dir, "_SUCCESS")):
+    elif combine == "replace":
         current = spark.read.parquet(table_dir)
-        fresh = updates.join(current.select(key).distinct(), key, "left_anti")
+        kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
+        merged = kept.unionByName(updates)
+    elif combine == "keep":
+        current = spark.read.parquet(table_dir)
+        fresh = updates.join(current.select(*keys).distinct(), keys, "left_anti")
         merged = current.unionByName(fresh)
     else:
-        merged = updates
+        merged = (
+            spark.read.parquet(table_dir).unionByName(updates)
+            .groupBy(*keys)
+            .agg(*[F.expr(f"{combine}(`{c}`)").alias(c)
+                   for c in updates.columns if c not in keys])
+        )
     _commit_table(merged, table_dir)
 
 
@@ -211,31 +227,6 @@ def sanitize_rel_type(col: str = "rel_type") -> F.Column:
     return F.upper(F.translate(F.col(col), " -", "__"))
 
 
-def merge_max(spark: SparkSession, table_dir: str, updates: DataFrame,
-              keys: list[str], val: str) -> None:
-    """Max-combine MERGE: per key, keep the greatest ``val`` of the current
-    table and the updates (the Iceberg `MERGE ... WHEN MATCHED AND s.v > t.v
-    THEN UPDATE ... WHEN NOT MATCHED THEN INSERT` shape). max is idempotent
-    and commutative, so replaying any batch — or the whole input — leaves
-    the table byte-identical: exactly the contract a mergeable sketch's
-    register state needs. Implemented as union + re-aggregate rather than a
-    join + greatest() (greatest() skips NULLs — the silent-floor trap
-    documented in operators/retrieval.py)."""
-    from pyspark.sql import functions as F
-
-    _recover_table(table_dir)
-    if os.path.exists(os.path.join(table_dir, "_SUCCESS")):
-        current = spark.read.parquet(table_dir)
-        merged = (
-            current.unionByName(updates)
-            .groupBy(*keys)
-            .agg(F.max(val).alias(val))
-        )
-    else:
-        merged = updates
-    _commit_table(merged, table_dir)
-
-
 def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Change-data capture between two table versions: one row per
     difference, tagged ``op`` = 'added' (in new, not old) or 'removed'
@@ -252,51 +243,6 @@ def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
             old.exceptAll(new).select(F.lit("removed").alias("op"), "*")
         )
     )
-
-
-def merge_min(spark: SparkSession, table_dir: str, updates: DataFrame,
-              keys: list[str], val: str) -> None:
-    """Min-combine MERGE: per key, keep the smallest ``val`` of the current
-    table and the updates — merge_max's dual, for running-minimum sketch
-    state (MinHash signatures fold by elementwise min exactly as HLL
-    registers fold by max). Same idempotent/commutative replay contract,
-    same union + re-aggregate implementation (least() skips NULLs — the
-    silent-floor trap — so a join-based form is avoided here too)."""
-    from pyspark.sql import functions as F
-
-    _recover_table(table_dir)
-    if os.path.exists(os.path.join(table_dir, "_SUCCESS")):
-        current = spark.read.parquet(table_dir)
-        merged = (
-            current.unionByName(updates)
-            .groupBy(*keys)
-            .agg(F.min(val).alias(val))
-        )
-    else:
-        merged = updates
-    _commit_table(merged, table_dir)
-
-
-def merge_bitor(spark: SparkSession, table_dir: str, updates: DataFrame,
-                keys: list[str], val: str) -> None:
-    """Bit-OR-combine MERGE: per key, OR ``val`` across the current table
-    and the updates — the fold a Bloom filter's word table needs (setting
-    a bit twice is setting it once: idempotent, commutative, associative,
-    so any replay or re-batching leaves the state byte-identical). Same
-    union + re-aggregate shape as merge_max/merge_min."""
-    from pyspark.sql import functions as F
-
-    _recover_table(table_dir)
-    if os.path.exists(os.path.join(table_dir, "_SUCCESS")):
-        current = spark.read.parquet(table_dir)
-        merged = (
-            current.unionByName(updates)
-            .groupBy(*keys)
-            .agg(F.expr(f"bit_or({val})").alias(val))
-        )
-    else:
-        merged = updates
-    _commit_table(merged, table_dir)
 
 
 def snapshot_growth(spark: SparkSession, base_dir: str,

@@ -15,28 +15,103 @@ are append-only keyed by deterministic ids, so MERGE is idempotent).
 Aggregating stages (canonicalization groupBy) are not streamed — they are
 the batch compaction step over the streamed mention/relation tables, exactly
 how a lambda-free incremental KG build works at scale.
+
+Every ``run_*_available_now`` runner here (and in stateful.py / windowed.py)
+is the same three steps: ``file_stream`` opens the input, a ``foreachBatch``
+body folds each micro-batch into keyed state with ``sinks.merge`` (or a
+parquet sink appends), and ``drain`` runs the query to the end of the
+available input. Additive folds key each batch's partial rows by
+``batch_key``, the content digest that makes their replays overwrite
+instead of double-count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from knowledgegraphbuilder_spark.config import KGConfig
 from knowledgegraphbuilder_spark.operators.chunk import chunk_documents
 from knowledgegraphbuilder_spark.operators.flatten import flatten_documents
 from knowledgegraphbuilder_spark.operators.ner import extract_mentions_stream
 from knowledgegraphbuilder_spark.sources.interleaved import SPAN_SCHEMA
+from knowledgegraphbuilder_spark.sources.sinks import merge
+
+SPANS = f"doc_id string, spans {SPAN_SCHEMA}"
 
 
-def read_span_stream(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = (
-        spark.readStream.schema(f"doc_id string, spans {SPAN_SCHEMA}")
-        .format("parquet")
-    )
-    if max_files_per_trigger:
+def file_stream(spark: SparkSession, input_dir: str, schema: str | None,
+                max_files_per_trigger: int | None = None) -> DataFrame:
+    """The stream of files landing under ``input_dir``: parquet read with
+    ``schema``, or text lines (one ``value`` string per line) when
+    ``schema`` is None; at most ``max_files_per_trigger`` new files per
+    micro-batch, every available file when None."""
+    reader = spark.readStream
+    if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(input_dir)
+    if schema is None:
+        return reader.format("text").load(input_dir)
+    return reader.schema(schema).format("parquet").load(input_dir)
+
+
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Run ``writer``'s query over everything available now
+    (``Trigger.AvailableNow``) and return once it has committed it all.
+    The checkpoint makes a rerun resume after the last committed batch;
+    a fresh checkpoint replays the whole input."""
+    (writer.option("checkpointLocation", checkpoint_dir)
+     .trigger(availableNow=True).start().awaitTermination())
+
+
+def batch_key(batch_df: DataFrame, id_col: str, payload: Column) -> str | None:
+    """Content key of a micro-batch for the additive folds, or None for an
+    empty batch: sha256 hex of ``n|lo|hi|hsum`` — row count, min and max
+    of ``id_col``, and the sum of per-row ``xxhash64(payload)`` residues.
+
+    An additive fold (counts, sketch partials) is not idempotent, so each
+    batch's partial rows replace-MERGE under this key: a replay, or a fresh
+    checkpoint over the same files in any order, lands identical content on
+    the identical key. The key must therefore be a function of the batch's
+    row multiset that distinct batches do not share: keying by batch_id or
+    min(id) alone overwrites a distinct batch that shares it, and
+    ``payload`` must cover the folded values as well as the ids, or two
+    batches with the same ids but different values collide."""
+    agg = batch_df.agg(
+        F.count("*").alias("n"),
+        F.min(id_col).alias("lo"),
+        F.max(id_col).alias("hi"),
+        # bounded residue before the sum: a raw xxhash64 sum overflows
+        # long under ANSI; decimal(38,0) over <1e9 residues never does
+        F.sum(
+            F.pmod(F.xxhash64(payload), F.lit(1_000_000_007))
+            .cast("decimal(38,0)")
+        ).alias("hsum"),
+    ).first()
+    if not agg["n"]:
+        return None
+    key = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
+    return hashlib.sha256(key.encode()).hexdigest()
+
+
+def _batch_relations(batch_df: DataFrame, cfg: KGConfig,
+                     ner_backend: object | None = None,
+                     re_backend: object | None = None) -> DataFrame:
+    """The batch RE chain over one micro-batch of complete documents."""
+    from knowledgegraphbuilder_spark.operators.ner import extract_mentions
+    from knowledgegraphbuilder_spark.operators.relations import extract_relations
+
+    docs = flatten_documents(batch_df)
+    mentions = extract_mentions(
+        chunk_documents(docs, cfg.ner_chunk_size, cfg.ner_chunk_overlap),
+        cfg, backend=ner_backend,
+    )
+    return extract_relations(
+        chunk_documents(docs, cfg.re_chunk_size, cfg.re_chunk_overlap),
+        mentions, cfg, backend=re_backend,
+    )
 
 
 def streaming_mentions(spans_stream: DataFrame, config: KGConfig | None = None) -> DataFrame:
@@ -53,15 +128,9 @@ def run_ingest_available_now(
     config: KGConfig | None = None,
 ) -> None:
     """Drain the input directory into a mentions parquet table, exactly once."""
-    mentions = streaming_mentions(read_span_stream(spark, input_dir), config)
-    q = (
-        mentions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    mentions = streaming_mentions(file_stream(spark, input_dir, SPANS), config)
+    drain(mentions.writeStream.format("parquet").option("path", output_dir),
+          checkpoint_dir)
 
 
 def run_relations_available_now(
@@ -81,32 +150,14 @@ def run_relations_available_now(
     which makes micro-batch replays after a failure idempotent: reprocessing
     rewrites the same rows. Output is byte-identical to the batch pipeline's
     relation table (pinned by tests/test_streaming.py)."""
-    from knowledgegraphbuilder_spark.operators.ner import extract_mentions
-    from knowledgegraphbuilder_spark.operators.relations import extract_relations
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
-
     cfg = config or KGConfig()
-    spans = read_span_stream(spark, input_dir)
+    spans = file_stream(spark, input_dir, SPANS)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        docs = flatten_documents(batch_df)
-        mentions = extract_mentions(
-            chunk_documents(docs, cfg.ner_chunk_size, cfg.ner_chunk_overlap),
-            cfg, backend=ner_backend,
-        )
-        rels = extract_relations(
-            chunk_documents(docs, cfg.re_chunk_size, cfg.re_chunk_overlap),
-            mentions, cfg, backend=re_backend,
-        )
-        merge_upsert(batch_df.sparkSession, output_dir, rels, "relation_id")
+        rels = _batch_relations(batch_df, cfg, ner_backend, re_backend)
+        merge(batch_df.sparkSession, output_dir, rels, "relation_id", "replace")
 
-    q = (
-        spans.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spans.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_curation_available_now(
@@ -129,31 +180,18 @@ def run_curation_available_now(
         pii_stats,
         quality_filter,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, f"{id_col} long, {text_col} string", 1)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         qf = quality_filter(batch_df, text_col=text_col, id_col=id_col).select(
             "doc_id", "kept", "reasons"
         )
         pii = pii_stats(batch_df, text_col=text_col, id_col=id_col)
-        merge_upsert(
-            batch_df.sparkSession, output_dir, qf.join(pii, "doc_id"), "doc_id"
-        )
+        merge(batch_df.sparkSession, output_dir, qf.join(pii, "doc_id"),
+              "doc_id", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_dedup_available_now(
@@ -172,18 +210,9 @@ def run_dedup_available_now(
     streaming state size is zero, so it survives any corpus size. Output:
     (content_hash, doc_id) — the canonical representative per distinct
     content, deterministic for time-ordered id-ascending batches."""
-    from pyspark.sql import functions as F
+    stream = file_stream(spark, input_dir, f"{id_col} long, {text_col} string", 1)
 
-    from knowledgegraphbuilder_spark.sources.sinks import merge_insert_missing
-
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
-
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         per_batch = (
             batch_df.select(
                 F.sha2(F.col(text_col), 256).alias("content_hash"),
@@ -192,17 +221,10 @@ def run_dedup_available_now(
             .groupBy("content_hash")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        merge_insert_missing(
-            batch_df.sparkSession, output_dir, per_batch, "content_hash"
-        )
+        merge(batch_df.sparkSession, output_dir, per_batch, "content_hash",
+              "keep")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_hll_available_now(
@@ -222,26 +244,14 @@ def run_hll_available_now(
     per group (a few KB) in a keyed table, not per-value state in executor
     memory; a day of 10^12 events folds into the same 4096 rows per group."""
     from knowledgegraphbuilder_spark.operators.sketches import hll_registers
-    from knowledgegraphbuilder_spark.sources.sinks import merge_max
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         regs = hll_registers(batch_df, group_col, value_expr)
-        merge_max(batch_df.sparkSession, table_dir, regs, ["g", "idx"], "maxr")
+        merge(batch_df.sparkSession, table_dir, regs, ["g", "idx"], "max")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_cms_available_now(
@@ -251,9 +261,9 @@ def run_cms_available_now(
 ) -> None:
     """Streaming heavy-hitter sketching: each micro-batch reduces to its own
     Count-Min sketch (operators/sketches.py:cms_sketch) and lands in the
-    state table under a CONTENT-derived batch key (sha256 of the batch's
-    (count, min, max, order-independent row-hash sum) over event_id), via
-    replace-by-key MERGE (sources/sinks.py:merge_upsert).
+    state table under a CONTENT-derived batch key (batch_key over event_id
+    and the sketched value), via replace-by-key MERGE (sources/sinks.py:
+    merge, ``"replace"``).
 
     CMS addition is associative/commutative but NOT idempotent — naively
     adding a replayed batch into one global sketch double-counts. Keying the
@@ -265,58 +275,24 @@ def run_cms_available_now(
     independent of batch row count; a compaction pass may fold closed
     batches into one row-group whenever replay of those batches is no
     longer possible."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.sketches import cms_sketch
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
-        # bkey must be a bijection of batch CONTENT: keying by min(event_id)
-        # alone silently overwrites a distinct batch that happens to share a
-        # min (overlapping files, re-split input). Fold an order-independent
-        # content digest instead — (count, min, max, sum of per-row hashes
-        # over event_id AND the sketched value) collapses only for identical
-        # row multisets; digesting event_id alone would still collide two
-        # batches whose ids match but whose sketched payloads differ.
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min("event_id").alias("lo"),
-            F.max("event_id").alias("hi"),
-            # bounded residue before the sum: a raw xxhash64 sum overflows
-            # long under ANSI; decimal(38,0) over <1e9 residues never does
-            F.sum(
-                F.pmod(
-                    F.xxhash64(F.concat_ws(
-                        "|",
-                        F.col("event_id").cast("string"),
-                        F.coalesce(F.expr(value_expr).cast("string"), F.lit("")),
-                    )),
-                    F.lit(1_000_000_007),
-                ).cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if agg["n"] == 0:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bkey = batch_key(batch_df, "event_id", F.concat_ws(
+            "|",
+            F.col("event_id").cast("string"),
+            F.coalesce(F.expr(value_expr).cast("string"), F.lit("")),
+        ))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         sk = cms_sketch(batch_df, value_expr).select(
-            F.sha2(F.lit(bkey), 256).alias("bkey"), "row", "col", "cnt"
+            F.lit(bkey).alias("bkey"), "row", "col", "cnt"
         )
-        merge_upsert(batch_df.sparkSession, table_dir, sk, "bkey")
+        merge(batch_df.sparkSession, table_dir, sk, "bkey", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_stream_join_available_now(
@@ -341,18 +317,9 @@ def run_stream_join_available_now(
     Output MERGEs per micro-batch keyed by the deterministic pair id, so
     replays (or a second run against a fresh checkpoint) are no-ops — same
     idempotency contract as every streaming sink here."""
-    from pyspark.sql import functions as F
-
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
     def side(d: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(d)
-            .withWatermark("ts", watermark)
-        )
+        return file_stream(spark, d, schema, 1).withWatermark("ts", watermark)
 
     v = side(views_dir).select(
         F.col("event_id").alias("view_id"),
@@ -377,16 +344,10 @@ def run_stream_join_available_now(
         .cast("long").alias("gap_s"),
     )
 
-    def process(batch_df, batch_id: int) -> None:
-        merge_upsert(batch_df.sparkSession, output_dir, batch_df, "pair_id")
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        merge(batch_df.sparkSession, output_dir, batch_df, "pair_id", "replace")
 
-    q = (
-        j.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(j.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_lsh_index_available_now(
@@ -409,26 +370,14 @@ def run_lsh_index_available_now(
     ann_lsh probes; per batch the work is one projection + a bounded MERGE —
     no cross-batch shuffle."""
     from knowledgegraphbuilder_spark.operators.ann import lsh_codes
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         idx = lsh_codes(batch_df, dim, n_bits, n_tables, seed)
-        merge_upsert(batch_df.sparkSession, table_dir, idx, "id")
+        merge(batch_df.sparkSession, table_dir, idx, "id", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def probe_lsh_index(
@@ -440,8 +389,6 @@ def probe_lsh_index(
     (never a re-projection of raw embeddings), exact cosine rescore, top-k.
     Output and values match ann_lsh run over the full batch corpus — pinned
     by the gate against the same SQL oracle."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.ann import cosine_scores, lsh_probe
 
     cond = lsh_probe(query, n_bits, n_tables, seed)
@@ -475,57 +422,28 @@ def run_edge_weights_available_now(
     alignment the summed stream state EQUALS the batch projection of the
     full input, for any batch sizes, arrival order, or replays.
     """
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.graphstats import cooccurrence_edges
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min(group_col).alias("lo"),
-            F.max(group_col).alias("hi"),
-            F.sum(
-                F.pmod(
-                    F.xxhash64(F.concat_ws(
-                        "|",
-                        F.col(group_col).cast("string"),
-                        F.col(item_col).cast("string"),
-                    )),
-                    F.lit(1_000_000_007),
-                ).cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if agg["n"] == 0:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bkey = batch_key(batch_df, group_col, F.concat_ws(
+            "|", F.col(group_col).cast("string"), F.col(item_col).cast("string")
+        ))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         part = cooccurrence_edges(
             batch_df, group_col, item_col, max_group_size=max_group_size
-        ).select(F.sha2(F.lit(bkey), 256).alias("bkey"), "src", "dst", "weight")
-        merge_upsert(batch_df.sparkSession, table_dir, part, "bkey")
+        ).select(F.lit(bkey).alias("bkey"), "src", "dst", "weight")
+        merge(batch_df.sparkSession, table_dir, part, "bkey", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_edge_weights(spark: SparkSession, table_dir: str) -> "DataFrame":
     """Fold the batch-keyed partial pair counts into live edge weights:
     one map-side-combinable sum per (src, dst). Under group-aligned batches
     this equals the batch co-occurrence projection exactly."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(table_dir)
         .groupBy("src", "dst")
@@ -561,42 +479,20 @@ def run_mg_available_now(
     candidates exactly against the corpus, so it is batching- AND
     partitioning-independent — byte-equal to the batch operator.
     """
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.sketches import (
         mg_partition_summaries,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
-        # content digest, not batch_id / min(id): same bijection argument
-        # as run_cms_available_now — replay of identical content must land
-        # on the identical key, distinct content must never collide
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min(id_col).alias("lo"),
-            F.max(id_col).alias("hi"),
-            F.sum(
-                F.pmod(
-                    F.xxhash64(F.concat_ws(
-                        "|",
-                        F.col(id_col).cast("string"),
-                        F.coalesce(F.col(text_col), F.lit("")),
-                    )),
-                    F.lit(1_000_000_007),
-                ).cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if agg["n"] == 0:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bkey = batch_key(batch_df, id_col, F.concat_ws(
+            "|",
+            F.col(id_col).cast("string"),
+            F.coalesce(F.col(text_col), F.lit("")),
+        ))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         keys = batch_df.selectExpr(f"{explode_expr} AS key").filter(
             "key IS NOT NULL AND key <> ''"
         )
@@ -605,20 +501,14 @@ def run_mg_available_now(
             F.sum("cnt").cast("long").alias("cnt")
         )
         rows = summ.select(
-            F.sha2(F.lit(bkey), 256).alias("bkey"),
+            F.lit(bkey).alias("bkey"),
             "key",
             "cnt",
             F.lit(n_batch).cast("long").alias("n_batch"),
         )
-        merge_upsert(batch_df.sparkSession, table_dir, rows, "bkey")
+        merge(batch_df.sparkSession, table_dir, rows, "bkey", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def heavy_hitters_from_mg_state(
@@ -631,8 +521,6 @@ def heavy_hitters_from_mg_state(
     corpus, threshold with the same integer comparison as the batch
     operator — the result is byte-equal to misra_gries_heavy_hitters on the
     full corpus."""
-    from pyspark.sql import functions as F
-
     state = spark.read.parquet(table_dir)
     n_total = (
         state.select("bkey", "n_batch").distinct()
@@ -668,52 +556,22 @@ def run_hdr_available_now(
 
     State per batch is <= ~64 * 2^HDR_SUB_BITS rows, independent of batch
     size — the fixed-state property that lets this run forever."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.sketches import hdr_histogram
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
-        # content digest (count/min/max/hash-sum), not batch_id: replay of
-        # identical content lands on the identical key — the bijection
-        # argument shared by every fold in this module
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min(id_col).alias("lo"),
-            F.max(id_col).alias("hi"),
-            F.sum(
-                F.pmod(
-                    F.xxhash64(F.concat_ws(
-                        "|",
-                        F.col(id_col).cast("string"),
-                        F.expr(value_expr).cast("string"),
-                    )),
-                    F.lit(1_000_000_007),
-                ).cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if agg["n"] == 0:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bkey = batch_key(batch_df, id_col, F.concat_ws(
+            "|", F.col(id_col).cast("string"), F.expr(value_expr).cast("string")
+        ))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         rows = hdr_histogram(batch_df, value_expr).select(
-            F.sha2(F.lit(bkey), 256).alias("bkey"), "b", "hi", "cnt"
+            F.lit(bkey).alias("bkey"), "b", "hi", "cnt"
         )
-        merge_upsert(batch_df.sparkSession, table_dir, rows, "bkey")
+        merge(batch_df.sparkSession, table_dir, rows, "bkey", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def quantiles_from_hdr_state(
@@ -724,8 +582,6 @@ def quantiles_from_hdr_state(
     union of all batches — then run the same cumulative walk as the batch
     operator (sketches.py:hdr_quantiles_from_sketch). Byte-equal to
     hdr_quantiles on the full corpus for any batching."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.sketches import (
         hdr_quantiles_from_sketch,
     )
@@ -761,24 +617,14 @@ def run_minhash_available_now(
     from knowledgegraphbuilder_spark.operators.sketches import (
         minhash_group_signatures,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_min
 
-    rs = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        rs = rs.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = rs.format("parquet").load(input_dir)
+    stream = file_stream(spark, input_dir, schema, max_files_per_trigger)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         sig = minhash_group_signatures(batch_df, group_col, text_col)
-        merge_min(batch_df.sparkSession, table_dir, sig, ["g", "perm"], "minv")
+        merge(batch_df.sparkSession, table_dir, sig, ["g", "perm"], "min")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_bloom_available_now(
@@ -800,26 +646,14 @@ def run_bloom_available_now(
     broadcastable to any consumer (dedup.bloom_anti_join) at every point
     in time."""
     from knowledgegraphbuilder_spark.operators.sketches import bloom_build
-    from knowledgegraphbuilder_spark.sources.sinks import merge_bitor
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         words = bloom_build(batch_df, value_expr)
-        merge_bitor(batch_df.sparkSession, table_dir, words, ["word"], "bits")
+        merge(batch_df.sparkSession, table_dir, words, "word", "bit_or")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_resample_available_now(
@@ -845,37 +679,15 @@ def run_resample_available_now(
     partials and runs the identical densify + forward-fill plan as the
     batch operator, so streamed state == batch output byte-for-byte.
     """
-    from pyspark.sql import functions as F
-
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
-
     bus = int(bucket_us)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min(id_col).alias("lo"),
-            F.max(id_col).alias("hi"),
-            F.sum(
-                F.pmod(
-                    F.xxhash64(F.concat_ws(
-                        "|",
-                        F.col(id_col).cast("string"),
-                        F.col(ts_col).cast("string"),
-                    )),
-                    F.lit(1_000_000_007),
-                ).cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if agg["n"] == 0:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bkey = batch_key(batch_df, id_col, F.concat_ws(
+            "|", F.col(id_col).cast("string"), F.col(ts_col).cast("string")
+        ))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         part = (
             batch_df.select(
                 F.col(key_col).alias("key"),
@@ -891,18 +703,12 @@ def run_resample_available_now(
                 F.count("*").cast("long").alias("n_events"),
                 F.sum("cents").cast("long").alias("sum_cents"),
             )
-            .select(F.sha2(F.lit(bkey), 256).alias("bkey"),
+            .select(F.lit(bkey).alias("bkey"),
                     "key", "bkt", "n_events", "sum_cents")
         )
-        merge_upsert(batch_df.sparkSession, table_dir, part, "bkey")
+        merge(batch_df.sparkSession, table_dir, part, "bkey", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_resampled(spark: SparkSession, table_dir: str) -> "DataFrame":
@@ -910,8 +716,6 @@ def read_resampled(spark: SparkSession, table_dir: str) -> "DataFrame":
     map-side-combinable sum per (key, bucket)) and run the SAME densify +
     forward-fill plan as batch resample_events — the streamed grid equals
     the batch grid for any batching of the input."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.timeseries import densify_ffill
 
     agg = (
@@ -934,8 +738,8 @@ def run_line_dedup_available_now(
     its docs into pseudo-lines (the SAME dedup.line_explode expression as
     the batch operator), keeps the min (doc_id, line_no) occurrence per
     line hash WITHIN the batch, and first-wins-MERGEs into the winner
-    table keyed by the line hash (run_dedup_available_now's
-    merge_insert_missing discipline — an arriving duplicate of an
+    table keyed by the line hash (run_dedup_available_now's first-wins
+    ``"keep"`` discipline — an arriving duplicate of an
     already-claimed line never replaces the original winner, and any
     replay is a no-op).
 
@@ -945,19 +749,11 @@ def run_line_dedup_available_now(
     first-occurrence choice; the gate feeds doc_id-range files. State
     lives entirely in the keyed winner table — zero executor memory.
     """
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.dedup import line_explode
-    from knowledgegraphbuilder_spark.sources.sinks import merge_insert_missing
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, f"{id_col} long, {text_col} string", 1)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         lines = line_explode(batch_df, text_col, id_col, words_per_line)
         winners = (
             lines.select(
@@ -968,17 +764,9 @@ def run_line_dedup_available_now(
             .agg(F.min("occ").alias("occ"))
             .select("line_hash", "occ.doc_id", "occ.line_no")
         )
-        merge_insert_missing(
-            batch_df.sparkSession, output_dir, winners, "line_hash"
-        )
+        merge(batch_df.sparkSession, output_dir, winners, "line_hash", "keep")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def line_dedup_stats_from_state(
@@ -991,8 +779,6 @@ def line_dedup_stats_from_state(
     each occurrence kept iff it IS the stored winner — under doc_id-
     ascending batches this equals dedup.line_dedup_stats exactly, which
     is what the dd_lines SQL oracle checks."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.dedup import line_explode
 
     w = spark.read.parquet(winners_dir).select(
@@ -1024,8 +810,6 @@ def read_cusum(spark: SparkSession, table_dir: str) -> "DataFrame":
     arrival order, or replay of the input, because (count) is a
     commutative monoid per bucket and everything after the fold is the
     shared plan."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.timeseries import (
         cusum_from_bucket_counts,
     )
@@ -1054,28 +838,17 @@ def run_kmv_available_now(
     for any batching, arrival order, or replay — KMV is a bounded-state
     mergeable sketch, the order-statistics analog of the HLL
     register-max fold."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.sketches import _H60
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
     kk = int(k)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, schema, 1)
 
-    def process(batch_df, batch_id: int) -> None:
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min(id_col).alias("lo"),
-            F.max(id_col).alias("hi"),
-        ).first()
-        if agg["n"] == 0:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bkey = batch_key(batch_df, id_col, F.concat_ws(
+            "|", F.col(id_col).cast("string"), F.col(value_col).cast("string")
+        ))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}"
         part = (
             batch_df.selectExpr(f"{value_col} as v")
             .distinct()
@@ -1087,17 +860,11 @@ def run_kmv_available_now(
             .distinct()
             .orderBy("h")
             .limit(kk)
-            .select(F.sha2(F.lit(bkey), 256).alias("bkey"), "h")
+            .select(F.lit(bkey).alias("bkey"), "h")
         )
-        merge_upsert(batch_df.sparkSession, table_dir, part, "bkey")
+        merge(batch_df.sparkSession, table_dir, part, "bkey", "replace")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_kmv(
@@ -1109,8 +876,6 @@ def read_kmv(
     identical estimator row as sketches.kmv_estimate — streamed state
     equals the batch sketch. ``n_exact_df`` supplies the exact-count
     column the gate compares (a production caller drops it)."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.sketches import _H60
 
     kk = int(k)
@@ -1160,29 +925,20 @@ def run_align_available_now(
     idempotency — the resume story). Output equals the batch alignment
     byte-for-byte (pinned by tests + the stream_align gate entry).
     """
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.multimodal import (
         align_media_to_text,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    spans = read_span_stream(spark, input_dir)
+    spans = file_stream(spark, input_dir, SPANS)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         aligned = align_media_to_text(batch_df).withColumn(
             "align_id",
             F.sha2(F.concat_ws(":", F.col("doc_id"), F.col("pos")), 256),
         )
-        merge_upsert(batch_df.sparkSession, table_dir, aligned, "align_id")
+        merge(batch_df.sparkSession, table_dir, aligned, "align_id", "replace")
 
-    q = (
-        spans.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spans.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_transitions_available_now(
@@ -1196,46 +952,22 @@ def run_transitions_available_now(
     replayed batch overwrites its own rows instead of double-counting.
     Read the total with read_transitions (sums partials per kind pair).
     """
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.multimodal import (
         modality_transitions,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    spans = read_span_stream(spark, input_dir)
+    spans = file_stream(spark, input_dir, SPANS)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-            # bounded residue before the sum (same overflow guard as
-            # run_cms: raw 60-bit hash sums overflow long under ANSI)
-            F.sum(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1_000_000_007))
-                .cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if not agg["n"]:
+        bkey = batch_key(batch_df, "doc_id", F.col("doc_id"))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         part = modality_transitions(batch_df).select(
-            F.sha2(F.lit(bkey), 256).alias("bkey"), "from_kind", "to_kind",
-            "cnt",
+            F.lit(bkey).alias("bkey"), "from_kind", "to_kind", "cnt"
         )
-        merge_upsert(batch_df.sparkSession, table_dir, part.withColumn(
-            "row_id",
-            F.sha2(F.concat_ws("|", "bkey", "from_kind", "to_kind"), 256),
-        ), "row_id")
+        merge(batch_df.sparkSession, table_dir, part, "bkey", "replace")
 
-    q = (
-        spans.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spans.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_transitions(spark: SparkSession, table_dir: str) -> "DataFrame":
@@ -1243,8 +975,6 @@ def read_transitions(spark: SparkSession, table_dir: str) -> "DataFrame":
     A table dir that was never created (every batch empty) folds to an
     empty result rather than a read error."""
     import os
-
-    from pyspark.sql import functions as F
 
     if not os.path.exists(table_dir):
         return spark.createDataFrame(
@@ -1267,29 +997,17 @@ def run_media_budget_available_now(
     replace-MERGE idempotency scheme as the transition fold. Read totals
     with read_media_budget. Refs are per-document in this corpus, so
     batch partials sum exactly (the batch unit carries whole docs)."""
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.multimodal import (
         fetch_media,
         media_refs,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
-    spans = read_span_stream(spark, input_dir)
+    spans = file_stream(spark, input_dir, SPANS)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-            F.sum(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1_000_000_007))
-                .cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if not agg["n"]:
+        bkey = batch_key(batch_df, "doc_id", F.col("doc_id"))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
         part = (
             fetch_media(media_refs(batch_df))
             .groupBy("media_type")
@@ -1297,30 +1015,18 @@ def run_media_budget_available_now(
                 F.count("*").cast("long").alias("n_refs"),
                 F.sum("n_bytes").cast("long").alias("total_bytes"),
             )
-            .select(
-                F.sha2(F.lit(bkey), 256).alias("bkey"), "media_type",
-                "n_refs", "total_bytes",
-            )
+            .select(F.lit(bkey).alias("bkey"), "media_type", "n_refs",
+                    "total_bytes")
         )
-        merge_upsert(batch_df.sparkSession, table_dir, part.withColumn(
-            "row_id", F.sha2(F.concat_ws("|", "bkey", "media_type"), 256)
-        ), "row_id")
+        merge(batch_df.sparkSession, table_dir, part, "bkey", "replace")
 
-    q = (
-        spans.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spans.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_media_budget(spark: SparkSession, table_dir: str) -> "DataFrame":
     """Fold the per-batch media-budget partials into corpus totals (empty
     fold when no batch ever carried media)."""
     import os
-
-    from pyspark.sql import functions as F
 
     if not os.path.exists(table_dir):
         return spark.createDataFrame(
@@ -1347,7 +1053,7 @@ def run_nt_ingest_available_now(
     - ``rels``:   (s_hash, pred, o_hash) statements keyed by a statement
       content hash,
 
-    both via first-wins MERGE (``merge_insert_missing``), so replaying
+    both via first-wins MERGE (``merge(..., "keep")``), so replaying
     any slice of the feed is a no-op and arrival ORDER DOES NOT MATTER:
     a statement whose subject/object label lands in a later file (or
     never in the same micro-batch) parks as hashes and resolves when
@@ -1362,18 +1068,11 @@ def run_nt_ingest_available_now(
     memory, and the streaming result equals the batch parser on the
     same lines (pinned by tests + the shared driver oracle).
     """
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.rdfio import (
         _LABEL_RE, _REL_RE, unescape_literal,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import merge_insert_missing
 
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(input_dir)
-    )
+    stream = file_stream(spark, input_dir, None, 1)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         nt = F.col("value")
@@ -1401,16 +1100,10 @@ def run_nt_ingest_available_now(
             )
             .dropDuplicates(["n_hash"])
         )
-        merge_insert_missing(ss, f"{output_dir}/rels", rels, "stmt_hash")
-        merge_insert_missing(ss, f"{output_dir}/labels", labels, "n_hash")
+        merge(ss, f"{output_dir}/rels", rels, "stmt_hash", "keep")
+        merge(ss, f"{output_dir}/labels", labels, "n_hash", "keep")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_nt_triples(spark: SparkSession, output_dir: str) -> "DataFrame":
@@ -1419,8 +1112,6 @@ def read_nt_triples(spark: SparkSession, output_dir: str) -> "DataFrame":
     table on both content-hash endpoints. Statements whose labels never
     arrived stay unresolved (inner join) — they become visible the
     moment the missing label file lands and the reader re-runs."""
-    from pyspark.sql import functions as F
-
     rels = spark.read.parquet(f"{output_dir}/rels")
     labels = spark.read.parquet(f"{output_dir}/labels")
     return (
@@ -1463,40 +1154,16 @@ def run_fusion_available_now(
     document firehose: state is one small row per (batch, statement),
     compactable once replays are impossible, and the posterior is always
     derivable from state alone — no corpus rescan."""
-    from pyspark.sql import functions as F
-
-    from knowledgegraphbuilder_spark.operators.ner import extract_mentions
-    from knowledgegraphbuilder_spark.operators.relations import extract_relations
-    from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
-
     cfg = config or KGConfig()
     residuals = residual_tenths or {"a": 3, "b": 1}
     classes = sorted(residuals)
-    spans = read_span_stream(spark, input_dir)
+    spans = file_stream(spark, input_dir, SPANS)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        agg = batch_df.agg(
-            F.count("*").alias("n"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-            F.sum(
-                F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
-                       F.lit(1_000_000_007)).cast("decimal(38,0)")
-            ).alias("hsum"),
-        ).first()
-        if agg["n"] == 0:
+        bkey = batch_key(batch_df, "doc_id", F.col("doc_id").cast("string"))
+        if bkey is None:
             return
-        bkey = f"{agg['n']}|{agg['lo']}|{agg['hi']}|{agg['hsum']}"
-        docs = flatten_documents(batch_df)
-        mentions = extract_mentions(
-            chunk_documents(docs, cfg.ner_chunk_size, cfg.ner_chunk_overlap),
-            cfg,
-        )
-        rels = extract_relations(
-            chunk_documents(docs, cfg.re_chunk_size, cfg.re_chunk_overlap),
-            mentions, cfg,
-        )
-        ev = rels.selectExpr(
+        ev = _batch_relations(batch_df, cfg).selectExpr(
             "head_text AS subj", "rel_type AS pred", "tail_text AS obj",
             "doc_id", f"({class_expr}) AS ex_class",
         ).distinct()
@@ -1506,17 +1173,10 @@ def run_fusion_available_now(
                       .otherwise(F.lit(0))).cast("long").alias(f"k_{c}")
                 for c in classes
             ]
-        ).select(F.sha2(F.lit(bkey), 256).alias("bkey"), "*")
-        merge_upsert(batch_df.sparkSession, table_dir, counts,
-                     ["bkey", "subj", "pred", "obj"])
+        ).select(F.lit(bkey).alias("bkey"), "*")
+        merge(batch_df.sparkSession, table_dir, counts, "bkey", "replace")
 
-    q = (
-        spans.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spans.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_fused(
@@ -1560,22 +1220,14 @@ def run_cc_available_now(
     (vertex -> component, upsert by vertex)."""
     import os
 
-    from pyspark.sql import functions as F
-
     from knowledgegraphbuilder_spark.operators.canonicalize import (
         connected_components,
     )
-    from knowledgegraphbuilder_spark.sources.sinks import (
-        merge_insert_missing, merge_upsert,
-    )
 
     edges_dir, assign_dir = f"{state_dir}/edges", f"{state_dir}/assign"
-    rs = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        rs = rs.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = rs.format("parquet").load(input_dir)
+    stream = file_stream(spark, input_dir, schema, max_files_per_trigger)
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         new_e = (
             batch_df.selectExpr(
@@ -1614,19 +1266,13 @@ def run_cc_available_now(
         if sub.isEmpty():
             return
         sub_assign = connected_components(sub)
-        merge_upsert(s, assign_dir, sub_assign, "vertex")
+        merge(s, assign_dir, sub_assign, "vertex", "replace")
         key = new_e.select(
             F.concat_ws("\x1f", "src", "dst").alias("ekey"), "src", "dst"
         )
-        merge_insert_missing(s, edges_dir, key, "ekey")
+        merge(s, edges_dir, key, "ekey", "keep")
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_cc_assign(spark: SparkSession, state_dir: str) -> "DataFrame":

@@ -80,18 +80,10 @@ def run_sessionize_available_now(
     spark, input_dir: str, output_dir: str, checkpoint_dir: str,
     gap_seconds: int = 1800, max_files_per_trigger: int | None = None,
 ) -> None:
+    from knowledgegraphbuilder_spark.streaming.ingest import drain, file_stream
     from knowledgegraphbuilder_spark.streaming.windowed import EVENT_SCHEMA
 
-    reader = spark.readStream.schema(EVENT_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    sessions = sessionize_stream(reader.load(input_dir), gap_seconds)
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    events = file_stream(spark, input_dir, EVENT_SCHEMA, max_files_per_trigger)
+    sessions = sessionize_stream(events, gap_seconds)
+    drain(sessions.writeStream.format("parquet").option("path", output_dir)
+          .outputMode("append"), checkpoint_dir)

@@ -19,10 +19,6 @@ EVENT_SCHEMA = (
 )
 
 
-def read_event_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    return spark.readStream.schema(EVENT_SCHEMA).format("parquet").load(input_dir)
-
-
 def windowed_event_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "30 minutes"
 ) -> DataFrame:
@@ -48,13 +44,9 @@ def run_windowed_counts_available_now(
     spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str,
     window: str = "1 hour", watermark: str = "30 minutes",
 ) -> None:
-    counts = windowed_event_counts(read_event_stream(spark, input_dir), window, watermark)
-    q = (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    from knowledgegraphbuilder_spark.streaming.ingest import drain, file_stream
+
+    events = file_stream(spark, input_dir, EVENT_SCHEMA)
+    counts = windowed_event_counts(events, window, watermark)
+    drain(counts.writeStream.format("parquet").option("path", output_dir)
+          .outputMode("append"), checkpoint_dir)

@@ -129,7 +129,7 @@ def test_compact_batched_state_preserves_fused_read(spark, tmp_path):
     """Compacting the stream_fuse state to one row per statement leaves
     read_fused byte-identical, and compaction is idempotent."""
     from knowledgegraphbuilder_spark.sources.sinks import (
-        compact_batched_state, merge_upsert,
+        compact_batched_state, merge,
     )
     from knowledgegraphbuilder_spark.streaming.ingest import read_fused
 
@@ -138,8 +138,8 @@ def test_compact_batched_state_preserves_fused_read(spark, tmp_path):
     rows2 = [("b2", "s", "p", "o", 2, 1)]
     schema = ("bkey string, subj string, pred string, obj string, "
               "k_a long, k_b long")
-    merge_upsert(spark, st, spark.createDataFrame(rows1, schema), "bkey")
-    merge_upsert(spark, st, spark.createDataFrame(rows2, schema), "bkey")
+    merge(spark, st, spark.createDataFrame(rows1, schema), "bkey", "replace")
+    merge(spark, st, spark.createDataFrame(rows2, schema), "bkey", "replace")
     before = {tuple(r) for r in read_fused(spark, st).collect()}
 
     compact_batched_state(spark, st, ["subj", "pred", "obj"],

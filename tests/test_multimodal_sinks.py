@@ -20,7 +20,7 @@ from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
 from knowledgegraphbuilder_spark.sources.interleaved import read_documents_parquet
 from knowledgegraphbuilder_spark.sources.sinks import (
     clear_graph,
-    merge_upsert,
+    merge,
     read_graph,
     write_graph,
 )
@@ -83,8 +83,8 @@ def test_graph_sinks_roundtrip(spark, corpus_df, tmp_path_factory):
     # MERGE upsert: replace one edge's weight, keep the rest
     upd = back["edges"].limit(1).withColumn("weight", F.lit(9.9).cast("double"))
     eid = upd.collect()[0]["edge_id"]
-    merge_upsert(spark, f"{base}/edges_flat", back["edges"], "edge_id")  # seed
-    merge_upsert(spark, f"{base}/edges_flat", upd, "edge_id")
+    merge(spark, f"{base}/edges_flat", back["edges"], "edge_id", "replace")  # seed
+    merge(spark, f"{base}/edges_flat", upd, "edge_id", "replace")
     merged = spark.read.parquet(f"{base}/edges_flat")
     assert merged.count() == kg.edges.count()
     assert merged.filter(F.col("edge_id") == eid).collect()[0]["weight"] == pytest.approx(9.9)
@@ -210,7 +210,7 @@ class TestCrashSafeCommit:
 
     def _seed(self, spark, d):
         t = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-        merge_upsert(spark, d, t, "k")
+        merge(spark, d, t, "k", "replace")
         return d
 
     def test_leftover_tmp_next_to_live_is_discarded(self, spark, tmp_path):
@@ -275,7 +275,7 @@ class TestCrashSafeCommit:
         d = self._seed(spark, str(tmp_path / "t"))
         os.rename(d, d + "__old")  # worst case: only __old survives
         upd = spark.createDataFrame([("b", 20)], "k string, v int")
-        merge_upsert(spark, d, upd, "k")
+        merge(spark, d, upd, "k", "replace")
         assert sorted(map(tuple, spark.read.parquet(d).collect())) == [
             ("a", 1), ("b", 20)]
 
