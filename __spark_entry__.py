@@ -247,9 +247,8 @@ def q_kg_snapshot_diff(spark, sf_dir):
 def q_src_jsonl(spark, sf_dir):
     """S1 JSONL scan under the value-exact gate: documents written as three
     id-less JSONL files, re-read through read_jsonl_documents — ids must be
-    the contiguous deterministic numbering (per-file sha256(text) windows +
-    broadcast file offsets), which the oracle recomputes from the same
-    partitioning rule."""
+    the contiguous deterministic numbering (global rank over (file,
+    sha256(text))), which the oracle recomputes from the same rule."""
     import hashlib
     import shutil
 
@@ -13456,10 +13455,10 @@ def q_sql_rfm(spark, sf_dir):
     corpus max day), frequency (events), monetary (exact cents), each
     ntile(5)-scored over a TOTAL (metric, user) order so the quintiles
     are deterministic; output is the 125-cell segment census. One scan,
-    one per-user aggregate, three windows over the user table (small
-    relative to events), one rollup."""
+    one per-user aggregate, three ``functions/rank.py:global_rank`` passes
+    over the user table, one rollup."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    from pyspark.sql import Window as W
+    from knowledgegraphbuilder_spark.functions.rank import global_rank, ntile
 
     e = _t(spark, sf_dir, "events").select(
         F.col("user_id").alias("u"),
@@ -13476,11 +13475,10 @@ def q_sql_rfm(spark, sf_dir):
         "u", "freq", "mon",
         F.expr("datediff(mx, last_d)").cast("long").alias("rec"),
     )
-    scored = per.select(
-        F.ntile(5).over(W.orderBy(F.desc("rec"), "u")).alias("r"),
-        F.ntile(5).over(W.orderBy(F.asc("freq"), "u")).alias("f"),
-        F.ntile(5).over(W.orderBy(F.asc("mon"), "u")).alias("m"),
-    )
+    scored = per
+    for name, key in (("r", F.desc("rec")), ("f", "freq"), ("m", "mon")):
+        g = global_rank(scored, key, "u")
+        scored = g.withColumn(name, ntile("rank", "n", 5)).drop("rank", "n")
     return scored.groupBy("r", "f", "m").agg(
         F.count("*").cast("long").alias("n_users")
     )
@@ -14598,45 +14596,19 @@ def q_ml_lift(spark, sf_dir):
     as exact-int ratios (6 dp) — the campaign-targeting view of the
     same ranking ml_auc scores by threshold.
 
-    Scale shape: NO corpus-sized ntile window (that single-partitions).
-    The global rank decomposes as cb(s) + rank_within(s): a cumulative
-    window over the DISTINCT-score histogram (histogram-sized) plus a
-    row_number PARTITIONED by score (parallel), and the decile is
-    Spark/DuckDB ntile's first-buckets-get-the-remainder split computed
-    arithmetically from (rank, n) — bit-identical to the oracle's
-    native ntile(10)."""
+    The decile is ``functions/rank.py:global_rank`` over (score desc,
+    doc_id) and its ``ntile(10)`` replay."""
     from pyspark.sql import Window as W
+
+    from knowledgegraphbuilder_spark.functions.rank import global_rank, ntile
 
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("n_chars").cast("long").alias("s"),
         F.expr("cast(lang = 'en' as int)").cast("long").alias("y"),
     )
-    hist = d.groupBy("s").agg(F.count("*").cast("long").alias("c"))
-    whist = W.orderBy(F.col("s").desc()).rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    cb = hist.select(
-        "s",
-        F.coalesce(F.sum("c").over(whist), F.lit(0)).cast("long")
-        .alias("cb"),
-    )
-    n = d.count()
-    win = W.partitionBy("s").orderBy("doc_id")
-    q, rmd = n // 10, n % 10
-    ranked = d.join(cb, "s").select(
-        "s", "y",
-        (F.col("cb") + F.row_number().over(win)).alias("rank"),
-    )
-    # ntile(10): the first n%10 buckets hold floor(n/10)+1 rows
-    decile_expr = (
-        f"case when rank <= {rmd * (q + 1)}"
-        f" then (rank - 1) div {q + 1} + 1"
-        f" else {rmd} + (rank - {rmd * (q + 1)} - 1) div {max(q, 1)} + 1"
-        f" end"
-    )
-    deciled = ranked.selectExpr(
-        "s", "y", f"cast({decile_expr} as long) as decile"
+    deciled = global_rank(d, F.desc("s"), "doc_id").select(
+        "y", ntile("rank", "n", 10).cast("long").alias("decile")
     )
     per = deciled.groupBy("decile").agg(
         F.count("*").cast("long").alias("n"),

@@ -176,7 +176,7 @@ def main() -> None:
         # about. Every individual run is recorded next to the min in
         # t_n_runs/t_4n_runs so the spread stays visible in the artifact.
         # Scale legs get a FIXED, PRE-TOUCHED heap (Xms=Xmx, AlwaysPreTouch,
-        # 12g instead of the interactive 32g): with a growable heap the 4N
+        # 12g, not the RAM-derived default): with a growable heap the 4N
         # leg's page faults + kernel reclaim of the previous subprocess JVM's
         # pages land inside the timed window of whichever leg runs next —
         # measured as an 81-97 s drift across otherwise-identical 4N runs.

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from knowledgegraphbuilder_spark.functions.rank import global_rank
+
 
 def cooccurrence_edges(
     df: DataFrame,
@@ -612,23 +614,11 @@ def negative_sample_edges(
     "filtered" setting — a corrupted pair that happens to be a true edge is
     dropped, not relabeled). Output: (src, dst_neg, sample_idx).
 
-    The node dictionary is the rank of each node in the sorted distinct-node
-    table — built WITHOUT a global window (the r4 verdict's one scale-killer:
-    ``row_number().over(Window.orderBy(...))`` funnels the whole vocabulary
-    through one task). Instead it uses the same order-preserving two-phase
-    assignment as ``sources/interleaved.py:read_jsonl_documents``: rows are
-    ranked per PREFIX BUCKET (window partitioned by the node's 2-char prefix
-    — parallel across buckets, and lexicographically order-preserving: every
-    string in bucket p1 sorts before every string in bucket p2 whenever
-    p1 < p2, because UTF-8 comparison is prefix-monotone), and bucket base
-    offsets come from a tiny per-bucket count aggregate (#buckets rows,
-    bounded by the squared charset, histogram-shaped) broadcast back.
-    offset + within-bucket rank == row_number over the global sort, exactly,
-    so the result — and the DuckDB oracle — is byte-identical to the old
-    global-window dictionary. The vocab count rides along as a column so no
-    driver-side collect gates the plan. The hash pick makes the sample
-    reproducible run-to-run AND replayable in the SQL oracle, unlike
-    rand()-based sampling."""
+    The node dictionary is each node's rank in the sorted distinct-node
+    table (``functions/rank.py:global_rank``); the vocab count rides along
+    as a column, so no driver-side collect gates the plan. The hash pick
+    makes the sample reproducible run-to-run AND replayable in the SQL
+    oracle, unlike rand()-based sampling."""
     e = edges.select(
         F.col(src_col).cast("string").alias("src"),
         F.col(dst_col).cast("string").alias("dst"),
@@ -637,20 +627,8 @@ def negative_sample_edges(
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
-        .withColumn("_pfx", F.substring("node", 1, 2))
     )
-    wb = Window.partitionBy("_pfx").orderBy("node")
-    ranked = nodes.withColumn("_rn", F.row_number().over(wb) - 1)
-    counts = ranked.groupBy("_pfx").agg(F.count("*").alias("_bn"))
-    wo = Window.orderBy("_pfx").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pfx",
-        F.coalesce(F.sum("_bn").over(wo), F.lit(0)).cast("long").alias("_off"),
-        F.sum("_bn").over(Window.partitionBy()).cast("long").alias("n"),
-    )
-    vocab = ranked.join(F.broadcast(offsets), "_pfx").select(
-        "node", (F.col("_off") + F.col("_rn")).cast("int").alias("rank"), "n"
-    )
+    vocab = global_rank(nodes, "node")
     h = ("cast(conv(substring(sha2(concat(src, '|', dst, '|', "
          "cast(i as string)), 256), 1, 15), 16, 10) as bigint)")
     cand = (

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from knowledgegraphbuilder_spark.functions.rank import global_rank, ntile
+
 _N = "cast(count(*) as decimal(12,0))"
 
 
@@ -695,49 +697,15 @@ def lorenz_deciles(
     share of the total.
 
     Exactness: per-decile sums and the running cumulative are exact
-    BIGINTs; only the final share divides (6 dp). Scale shape: the rank
-    is a DISTRIBUTED range sort, never an unpartitioned ntile window
-    (which would move the whole corpus to one task — r4 verdict watch
-    item): rows range-repartition on (value, id), rank per partition,
-    and tiny per-partition counts broadcast back as base offsets (the
-    interleaved.py / negative_sample_edges two-phase discipline); the
-    ntile(10) allocation — first (n mod 10) tiles one row larger — is
-    then a closed-form expression over the exact global rank, replaying
-    window-ntile semantics bit-for-bit. (x, id) is a total order (ids
-    unique), so ranks are deterministic; the repartitioned frame is
-    pinned with localCheckpoint so both passes see one partitioning.
-    Everything after is decile-cardinality-sized.
+    BIGINTs; only the final share divides (6 dp). The rank is
+    ``functions/rank.py:global_rank`` and the decile its ``ntile(10)``
+    replay; everything after is decile-cardinality-sized.
     """
     from pyspark.sql import Window as W
 
     d = df.selectExpr(f"{value_expr} as x", f"{id_expr} as id")
-    nparts = max(d.sparkSession.sparkContext.defaultParallelism, 2)
-    part = (
-        d.repartitionByRange(nparts, "x", "id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wp = W.partitionBy("_pid").orderBy("x", "id")
-    ranked = part.withColumn("_rn", F.row_number().over(wp))
-    counts = ranked.groupBy("_pid").agg(F.count("*").alias("_pn"))
-    wo = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_pn").over(wo), F.lit(0)).cast("long").alias("_off"),
-        F.sum("_pn").over(W.partitionBy()).cast("long").alias("_n"),
-    )
-    t = (
-        ranked.join(F.broadcast(offsets), "_pid")
-        .selectExpr("x", "_off + _rn - 1 AS k", "_n")
-        .selectExpr(
-            "x",
-            # ntile(10): q = n div 10, r = n mod 10; tiles 1..r hold q+1
-            # rows, tiles r+1..10 hold q — replayed from the 0-based rank
-            "CASE WHEN k < (_n % 10) * (_n div 10 + 1)"
-            " THEN cast(k div (_n div 10 + 1) + 1 as int)"
-            " ELSE cast((_n % 10) + (k - (_n % 10) * (_n div 10 + 1))"
-            "      div (_n div 10) + 1 as int) END AS decile",
-        )
+    t = global_rank(d, "x", "id").select(
+        "x", ntile("rank", "n", 10).alias("decile")
     )
     per = t.groupBy("decile").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -1468,16 +1436,12 @@ def gini_coefficient(
     in both engines.
 
     Exactness: sum(i * x_i) and sum(x) are exact integers (decimal(38)
-    against overflow); the formula is two final divides. Scale shape: one
-    global range-sort (the intrinsic cost of ranking) + one aggregate.
+    against overflow); the formula is two final divides. The 1-based rank
+    i is ``functions/rank.py:global_rank`` + 1, then one aggregate.
     """
-    from pyspark.sql import Window as W
-
     d = df.selectExpr(f"cast({value_expr} as bigint) as x",
                       f"{id_expr} as id")
-    r = d.select(
-        "x", F.row_number().over(W.orderBy("x", "id")).alias("i")
-    )
+    r = global_rank(d, "x", "id").selectExpr("x", "rank + 1 as i")
     return r.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("sx"),

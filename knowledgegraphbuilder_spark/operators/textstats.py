@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from knowledgegraphbuilder_spark.functions.rank import global_rank, ntile
+
 # tiny deterministic stopword lists for the n-gram/stopword language heuristic
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "is"),
@@ -737,22 +739,16 @@ def ccnet_buckets(
     Exactness: the rank orders by (ppl, doc_id) — a TOTAL order, so ntile
     is deterministic in both engines; per-tier mean ppl sums the 4-dp
     perplexities as DECIMAL(18,4) (exact, order-independent) and divides
-    once. Scale shape: one global range-sort of (ppl, id) pairs — the
-    intrinsic cost of a corpus-wide ranking, Spark's range-partitioned
-    exchange is the distributed algorithm for it — then tier-cardinality
-    aggregates.
+    once. The rank of (ppl, id) is ``functions/rank.py:global_rank`` and
+    the tier its ``ntile`` replay; everything after is tier-sized.
     """
-    from pyspark.sql import Window as W
-
     pp = bigram_perplexity(docs, text_col=text_col, id_col=id_col).select(
         F.col("doc_id").cast("long").alias("id"),
         "n_tokens",
         "ppl",
     )
-    t = pp.select(
-        "n_tokens",
-        "ppl",
-        F.ntile(n_tiers).over(W.orderBy("ppl", "id")).alias("tier"),
+    t = global_rank(pp, "ppl", "id").select(
+        "n_tokens", "ppl", ntile("rank", "n", n_tiers).alias("tier")
     )
     return (
         t.groupBy("tier")

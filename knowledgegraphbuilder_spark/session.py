@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of this machine's physical RAM in whole GiB, at least 1g and at
+    most 32g: in local mode the driver heap is the executor heap, and a
+    heap larger than RAM gets the JVM killed instead of spilling."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(max(ram // 2 // 2**30, 1), 32)}g"
+
+
 def build_session(
     app_name: str = "kg-spark",
     parallelism: int | None = None,
@@ -45,7 +53,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("KG_SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("KG_SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     # single-JVM local mode: driver == executor, so GC tuning goes through

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from knowledgegraphbuilder_spark.functions.rank import global_rank
+
 SPAN_SCHEMA = (
     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
@@ -131,18 +133,15 @@ def read_jsonl_documents(spark: SparkSession, path: str) -> DataFrame:
     ``{id?, text, metadata?}``; missing id -> ``doc_{n}`` with contiguous,
     deterministic global numbering.
 
-    Scale design: numbering never funnels rows through one task. Rows are
-    ranked per file (window PARTITIONED by input file — parallel across
-    files) and file base offsets come from a tiny per-file count aggregate
-    (#files rows) broadcast back. The within-file order key is
-    (sha256(text), to_json(metadata)) rather than physical line order —
+    The numbering is ``functions/rank.py:global_rank`` over (input file,
+    sha256(text), to_json(metadata)) rather than physical line order —
     stable across partitionings and re-reads; fully identical rows are
     interchangeable, so the assignment is deterministic as a table. This
     deliberately diverges from the reference's line-order numbering (file
     line numbers are not recoverable from a parallel JSON scan); callers who
-    need line ids should write them into the ``id`` field."""
-    from pyspark.sql.window import Window
-
+    need line ids should write them into the ``id`` field. Calling the
+    reader now runs Spark work beyond schema inference: the rank samples
+    its range bounds and pins the range-partitioned scan in one job."""
     raw = spark.read.json(path)
     cols = raw.columns
     idc = F.col("id").cast("string") if "id" in cols else F.lit(None).cast("string")
@@ -153,17 +152,10 @@ def read_jsonl_documents(spark: SparkSession, path: str) -> DataFrame:
         meta.cast("map<string,string>").alias("metadata"),
         F.input_file_name().alias("_file"),
     )
-    wf = Window.partitionBy("_file").orderBy(F.sha2("text", 256), F.to_json("metadata"))
-    df = df.withColumn("_rn", F.row_number().over(wf) - 1)
-    counts = df.groupBy("_file").agg(F.count("*").alias("_n"))
-    wo = Window.orderBy("_file").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "_off", F.coalesce(F.sum("_n").over(wo), F.lit(0)).cast("long")
-    )
-    df = df.join(F.broadcast(offsets.select("_file", "_off")), "_file")
+    df = global_rank(df, "_file", F.sha2("text", 256), F.to_json("metadata"))
     return df.select(
         F.coalesce(
-            "explicit_id", F.concat(F.lit("doc_"), (F.col("_off") + F.col("_rn")).cast("string"))
+            "explicit_id", F.concat(F.lit("doc_"), F.col("rank").cast("string"))
         ).alias("doc_id"),
         "text",
         "metadata",

@@ -75,20 +75,3 @@ def test_lorenz_two_phase_rank_replays_ntile_exactly(spark):
            .agg(F.count("*").alias("n"), F.sum("v").alias("s")).collect()}
     assert got == ref and len(got) == 10
 
-
-def test_lorenz_plan_has_no_corpus_sized_global_window(spark):
-    # the only unpartitioned windows left must sit above aggregates
-    # (per-partition counts / decile rollups), never above row-level data
-    from knowledgegraphbuilder_spark.operators.mlstats import lorenz_deciles
-
-    df = spark.range(5000).select(
-        (F.col("id") % 97).alias("v"), F.col("id").alias("i")
-    )
-    plan = (lorenz_deciles(df, "v", "i")
-            ._jdf.queryExecution().executedPlan().toString())
-    lines = plan.splitlines()
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" not in line:
-            continue
-        child = lines[i + 1] if i + 1 < len(lines) else ""
-        assert "HashAggregate" in child or "SortAggregate" in child, child

@@ -1,6 +1,6 @@
 """Unit + invariant tests for the tranche-12 operators: weekly churn
-flows, Lorenz deciles, closed-form 2-feature PCA, and the streamed
-resample fold. DuckDB value-exactness is pinned by
+flows, closed-form 2-feature PCA, and the streamed resample fold
+(Lorenz deciles moved to ``test_global_rank.py``). DuckDB value-exactness is pinned by
 ``tools/check_contract.py``; these pin hand-checkable algebra,
 degenerate inputs, and the stream == batch equality."""
 
@@ -9,10 +9,7 @@ import math
 
 import pyspark.sql.functions as F
 
-from knowledgegraphbuilder_spark.operators.mlstats import (
-    lorenz_deciles,
-    pca2,
-)
+from knowledgegraphbuilder_spark.operators.mlstats import pca2
 from knowledgegraphbuilder_spark.operators.timeseries import (
     resample_events,
     weekly_churn,
@@ -50,28 +47,6 @@ class TestChurn:
         assert out["2024-01-01"]["n_retained_next"] == 0
         # the return in week 2 is NOT new (row_number > 1)
         assert out["2024-01-15"]["n_new"] == 0
-
-
-class TestLorenz:
-    def test_uniform_values_linear_curve(self, spark):
-        df = spark.createDataFrame(
-            [(i, 10) for i in range(10)], "doc_id long, n_chars long"
-        )
-        out = sorted(lorenz_deciles(df).collect(), key=lambda r: r["decile"])
-        assert len(out) == 10
-        for i, r in enumerate(out, 1):
-            assert r["n_docs"] == 1 and r["sum_x"] == 10
-            assert abs(r["cum_share"] - round(i / 10, 6)) < 1e-9
-
-    def test_concentrated_mass(self, spark):
-        # 9 docs of 0 chars + 1 doc of 100: bottom 9 deciles share 0
-        df = spark.createDataFrame(
-            [(i, 0) for i in range(9)] + [(9, 100)],
-            "doc_id long, n_chars long",
-        )
-        out = sorted(lorenz_deciles(df).collect(), key=lambda r: r["decile"])
-        assert all(r["cum_share"] == 0.0 for r in out[:9])
-        assert abs(out[9]["cum_share"] - 1.0) < 1e-9
 
 
 class TestPCA2:

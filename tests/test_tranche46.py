@@ -1,43 +1,7 @@
-"""Unit tests for the tranche-46 operators: CCNet quality tiers and the
-doc-length survival curve."""
+"""Unit tests for the tranche-46 operators: the doc-length survival curve
+(CCNet quality tiers moved to ``test_global_rank.py``)."""
 
-from knowledgegraphbuilder_spark.operators.textstats import (
-    ccnet_buckets,
-    length_survival,
-)
-
-
-class TestCcnetBuckets:
-    def test_tiers_partition_and_order(self, spark):
-        # 6 docs: two are repetitive gibberish, four read alike -> the
-        # alike docs land in the head tiers, gibberish in the tail
-        rows = [
-            (0, "the cat sat on the mat"),
-            (1, "the cat sat on the mat"),
-            (2, "the dog sat on the mat"),
-            (3, "the cat lay on the mat"),
-            (4, "zz qq vv kk jj ww"),
-            (5, "qq zz ww vv kk jj"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {r["tier"]: r for r in ccnet_buckets(df, n_tiers=3).collect()}
-        assert set(out) == {1, 2, 3}
-        assert sum(r["n_docs"] for r in out.values()) == 6
-        # tiers are perplexity-ordered: head max <= middle min, etc.
-        assert out[1]["max_ppl"] <= out[2]["min_ppl"]
-        assert out[2]["max_ppl"] <= out[3]["min_ppl"]
-        # gibberish docs (4, 5) have the highest perplexity -> tail tier
-        assert out[3]["n_docs"] == 2
-        assert out[3]["total_tokens"] == 12
-
-    def test_mean_is_decimal_exact(self, spark):
-        rows = [(i, "a b c") for i in range(3)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = ccnet_buckets(df, n_tiers=1).collect()
-        assert len(out) == 1
-        r = out[0]
-        # identical docs -> mean == min == max
-        assert r["mean_ppl"] == round(r["min_ppl"], 6) == round(r["max_ppl"], 6)
+from knowledgegraphbuilder_spark.operators.textstats import length_survival
 
 
 class TestLengthSurvival:

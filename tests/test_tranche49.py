@@ -1,33 +1,11 @@
-"""Unit tests for the tranche-49 operators: Gini coefficient, Good-Turing
-coverage, duplicate-cluster histogram."""
+"""Unit tests for the tranche-49 operators: Good-Turing coverage and the
+duplicate-cluster histogram (the Gini coefficient moved to
+``test_global_rank.py``)."""
 
 from knowledgegraphbuilder_spark.operators.dedup import dup_cluster_histogram
-from knowledgegraphbuilder_spark.operators.mlstats import gini_coefficient
 from knowledgegraphbuilder_spark.operators.textstats import (
     good_turing_coverage,
 )
-
-
-class TestGini:
-    def test_uniform_distribution_is_zero(self, spark):
-        rows = [(i, 5) for i in range(10)]
-        df = spark.createDataFrame(rows, "id long, x long")
-        assert gini_coefficient(df, "x", "id").collect()[0]["gini"] == 0.0
-
-    def test_hand_computed(self, spark):
-        # values 1, 2, 3, 4 ascending: G = 2*(1+4+9+16)/(4*10) - 5/4 = 0.25
-        rows = [(i, i + 1) for i in range(4)]
-        df = spark.createDataFrame(rows, "id long, x long")
-        r = gini_coefficient(df, "x", "id").collect()[0]
-        assert r["n"] == 4
-        assert r["total"] == 10
-        assert r["gini"] == 0.25
-
-    def test_extreme_concentration(self, spark):
-        # one key carries everything: G = (n-1)/n
-        rows = [(i, 0) for i in range(9)] + [(9, 100)]
-        df = spark.createDataFrame(rows, "id long, x long")
-        assert gini_coefficient(df, "x", "id").collect()[0]["gini"] == 0.9
 
 
 class TestGoodTuring:
