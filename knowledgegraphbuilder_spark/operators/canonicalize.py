@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from knowledgegraphbuilder_spark.config import KGConfig
 from knowledgegraphbuilder_spark.functions import ids
+from knowledgegraphbuilder_spark.functions.fixpoint import fixpoint
 
 
 def cluster_mentions_exact(
@@ -101,33 +102,21 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(src, dst) undirected edge list -> (vertex, component) assignment where
     ``component`` is the minimum vertex id of the component (deterministic).
 
-    Alternates small-star / large-star until the edge set reaches fixpoint
-    (O(log n) rounds); each round's groupBy-min is map-side combinable, so
-    skewed hub vertices reduce to one row per partition before the shuffle.
-    ``localCheckpoint`` truncates the growing plan lineage each round.
+    Alternates large-star / small-star until the edge set reaches its
+    fixpoint (O(log n) rounds); each round's groupBy-min is map-side
+    combinable, so skewed hub vertices reduce to one row per partition
+    before the shuffle. The loop is
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.fixpoint`: it
+    raises RuntimeError if round ``max_iter`` still changed the edge set,
+    so a returned assignment is always the converged one.
     """
     vertices = (
         edges.select(F.col("src").cast("string").alias("v"))
         .union(edges.select(F.col("dst").cast("string").alias("v")))
         .distinct()
     )
-    def _sig(df: DataFrame):
-        # cheap fixpoint detector: (row count, order-insensitive checksum);
-        # bit_xor cannot overflow (edge rows are distinct, so xor-cancellation
-        # of duplicate rows is not a concern)
-        return tuple(
-            df.agg(F.count("*"), F.expr("bit_xor(xxhash64(src, dst))")).collect()[0]
-        )
-
-    e = _canon_edges(edges).localCheckpoint(eager=True)
-    sig = _sig(e)
-    for _ in range(max_iter):
-        e1 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        sig1 = _sig(e1)
-        e = e1
-        if sig1 == sig:
-            break
-        sig = sig1
+    e = fixpoint(lambda e: _small_star(_large_star(e)), _canon_edges(edges),
+                 max_iter, "connected_components")
     # at fixpoint every edge is (v, root); vertices absent from e are their own root
     assign = e.select(F.col("src").alias("v"), F.col("dst").alias("component"))
     roots = vertices.join(assign, "v", "left_anti").select(

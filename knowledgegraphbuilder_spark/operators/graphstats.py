@@ -24,10 +24,45 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from knowledgegraphbuilder_spark.functions.fixpoint import bfs_levels, fixpoint
 from knowledgegraphbuilder_spark.functions.rank import global_rank
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str, *carry: Column) -> DataFrame:
+    """Both orientations of every edge as string ``(u, v)`` pairs plus the
+    ``carry`` columns, distinct. Self-loops stay (once); callers that must
+    not see them filter ``u != v``."""
+    u, v = F.col(src_col).cast("string"), F.col(dst_col).cast("string")
+    return (
+        edges.select(u.alias("u"), v.alias("v"), *carry)
+        .unionAll(edges.select(v.alias("u"), u.alias("v"), *carry))
+        .distinct()
+    )
+
+
+def _canonical_pairs(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Each undirected edge once as string ``(a, b)`` with ``a < b``:
+    orientation, duplicates and self-loops dropped."""
+    u, v = F.col(src_col).cast("string"), F.col(dst_col).cast("string")
+    return (
+        edges.select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _endpoints(e: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """The distinct nodes an edge list touches, as ``node``."""
+    return e.select(F.col(a).alias("node")).unionAll(e.select(F.col(b).alias("node"))).distinct()
 
 
 def cooccurrence_edges(
@@ -92,14 +127,7 @@ def triangle_clustering(edges: DataFrame, src_col: str = "src", dst_col: str = "
             F.col(dst_col).cast("string").alias("b"),
         )
     else:
-        e = (
-            edges.select(
-                F.least(F.col(src_col).cast("string"), F.col(dst_col).cast("string")).alias("a"),
-                F.greatest(F.col(src_col).cast("string"), F.col(dst_col).cast("string")).alias("b"),
-            )
-            .filter(F.col("a") < F.col("b"))
-            .distinct()
-        )
+        e = _canonical_pairs(edges, src_col, dst_col)
     deg = (
         e.select(F.col("a").alias("node")).unionAll(e.select(F.col("b").alias("node")))
         .groupBy("node").agg(F.count("*").cast("long").alias("degree"))
@@ -153,6 +181,31 @@ def triangle_clustering(edges: DataFrame, src_col: str = "src", dst_col: str = "
     )
 
 
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, deg) over canonical pairs (a, b)."""
+    return (
+        e.select(F.col("a").alias("node"))
+        .unionAll(e.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").cast("long").alias("deg"))
+    )
+
+
+def _peel(k: int):
+    """One k-core peel round over canonical pairs (a, b): drop every edge
+    with an endpoint of degree < k."""
+
+    def step(e: DataFrame) -> DataFrame:
+        keep = _degrees(e).filter(F.col("deg") >= k).select("node")
+        return (
+            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
+            .select("a", "b")
+        )
+
+    return step
+
+
 def k_core(
     edges: DataFrame,
     k: int,
@@ -169,52 +222,16 @@ def k_core(
     Each round is one map-side-combinable degree count plus two semi-joins
     on node keys — never a cross product; the edge set only shrinks.
     Peeling converges in at most graph-diameter-ish rounds in practice
-    (each round removes every currently-underweight node at once);
-    ``max_rounds`` is a driver-loop bound, and because the converged state
-    is a fixed point, running extra rounds never changes the result — which
-    is what lets the SQL oracle replay a fixed unroll.
+    (each round removes every currently-underweight node at once). The
+    loop is :func:`~knowledgegraphbuilder_spark.functions.fixpoint.fixpoint`:
+    it raises RuntimeError if round ``max_rounds`` still peeled an edge,
+    so the result is always the converged core.
 
-    Lineage is truncated with an eager localCheckpoint per round (the
-    nondeterministic-recompute trap documented in plans/pipeline.py).
     Output: (node, core_degree) for k-core members — core_degree is the
     degree WITHIN the core subgraph (>= k by construction)."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col).cast("string"), F.col(dst_col).cast("string")).alias("a"),
-            F.greatest(F.col(src_col).cast("string"), F.col(dst_col).cast("string")).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        deg = (
-            e.select(F.col("a").alias("node"))
-            .unionAll(e.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        ne = (
-            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        n_new = ne.count()
-        e = ne
-        if n_new == n_edges:
-            break
-        n_edges = n_new
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("core_degree"))
-    )
+    core = fixpoint(_peel(k), _canonical_pairs(edges, src_col, dst_col),
+                    max_rounds, f"k_core(k={k})")
+    return _degrees(core).withColumnRenamed("deg", "core_degree")
 
 
 def bfs_hops(
@@ -232,39 +249,27 @@ def bfs_hops(
     by an anti-join against the settled set — never a cross product, and the
     frontier only touches hop-h nodes, so per-round cost is proportional to
     the frontier's edge boundary (the textbook Pregel/BSP BFS shape; on a
-    real cluster each round is one shuffle on the node key). Lineage is
-    truncated per round with an eager localCheckpoint (the
-    nondeterministic-recompute trap documented in plans/pipeline.py).
+    real cluster each round is one shuffle on the node key). The loop is
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.bfs_levels`.
 
     Output: (node, hop) — hop is the EXACT shortest distance for every node
     within ``max_hops`` of a seed (frontier-at-round-h nodes are found at
     their true minimum round, so the cap truncates coverage, not values).
     """
-    sym = (
-        edges.select(F.col(src_col).cast("string").alias("u"), F.col(dst_col).cast("string").alias("v"))
-        .unionAll(
-            edges.select(F.col(dst_col).cast("string").alias("u"), F.col(src_col).cast("string").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = seeds.select(
+    sym = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
+    start = seeds.select(
         F.col(seeds.columns[0]).cast("string").alias("node"), F.lit(0).alias("hop")
-    ).distinct().localCheckpoint(eager=True)
-    frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
+    ).distinct()
+
+    def advance(level: DataFrame, h: int) -> DataFrame:
+        return (
+            sym.join(level.select(F.col("node").alias("u")), "u")
             .select(F.col("v").alias("node"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
+
+    dist = _union(bfs_levels(start, advance, ["node"], max_hops))
     return dist.select("node", F.col("hop").cast("int").alias("hop"))
 
 
@@ -288,14 +293,7 @@ def label_propagation(
     hot-node cost is the node's degree, never degree². Output:
     (node, community).
     """
-    sym = (
-        edges.select(F.col(src_col).cast("string").alias("u"), F.col(dst_col).cast("string").alias("v"))
-        .unionAll(
-            edges.select(F.col(dst_col).cast("string").alias("u"), F.col(src_col).cast("string").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
         "lbl", F.col("node")
     ).localCheckpoint(eager=True)
@@ -337,18 +335,7 @@ def sssp_hops(
     Output: (node, dist) for every node reachable within ``rounds`` edges.
     """
     sym = (
-        edges.select(
-            F.col(src_col).cast("string").alias("u"),
-            F.col(dst_col).cast("string").alias("v"),
-            F.col(weight_col).cast("long").alias("w"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst_col).cast("string").alias("u"),
-                F.col(src_col).cast("string").alias("v"),
-                F.col(weight_col).cast("long").alias("w"),
-            )
-        )
+        _undirected(edges, src_col, dst_col, F.col(weight_col).cast("long").alias("w"))
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
         .localCheckpoint(eager=True)
@@ -454,14 +441,7 @@ def deterministic_walks(
     same join. Walks at a dead-end node simply stop (no step-t row). Output:
     (seed, step, node) — step 0 is the seed itself.
     """
-    sym = (
-        edges.select(F.col(src_col).cast("string").alias("u"), F.col(dst_col).cast("string").alias("v"))
-        .unionAll(
-            edges.select(F.col(dst_col).cast("string").alias("u"), F.col(src_col).cast("string").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     cur = seeds.select(
         F.col(seeds.columns[0]).cast("string").alias("seed")
     ).distinct().withColumn("node", F.col("seed")).withColumn("step", F.lit(0))
@@ -671,37 +651,26 @@ def harmonic_centrality(
 
     Shape: SEED-KEYED BFS — one (seed, node) frontier advances all seeds'
     searches in the same per-round equi-join + anti-join (Pregel/BSP shape,
-    per-round cost = the frontiers' edge boundary); rounds truncate lineage
-    with eager localCheckpoints. Output: (seed, n_reached, harmonic_units).
+    per-round cost = the frontiers' edge boundary), run by
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.bfs_levels` with
+    keys (seed, node). Output: (seed, n_reached, harmonic_units).
     """
-    sym = (
-        edges.select(F.col(src_col).cast("string").alias("u"),
-                     F.col(dst_col).cast("string").alias("v"))
-        .unionAll(edges.select(F.col(dst_col).cast("string").alias("u"),
-                               F.col(src_col).cast("string").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = (
+    sym = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
+    start = (
         seeds.select(F.col(seeds.columns[0]).cast("string").alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("node"), F.lit(0).alias("hop"))
-        .localCheckpoint(eager=True)
     )
-    frontier = dist.select("seed", "node")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
+
+    def advance(level: DataFrame, h: int) -> DataFrame:
+        return (
+            sym.join(level.select("seed", F.col("node").alias("u")), "u")
             .select("seed", F.col("v").alias("node"))
             .distinct()
-            .join(dist.select("seed", "node"), ["seed", "node"], "left_anti")
             .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("seed", "node")
+
+    dist = _union(bfs_levels(start, advance, ["seed", "node"], max_hops))
     return (
         dist.filter(F.col("hop") > 0)
         .groupBy("seed")
@@ -737,14 +706,7 @@ def modularity(
 
     Output: (community, n_nodes, in_edges, deg_sum, q) with q rounded 6dp.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col).cast("string"), F.col(dst_col).cast("string")).alias("a"),
-            F.greatest(F.col(src_col).cast("string"), F.col(dst_col).cast("string")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _canonical_pairs(edges, src_col, dst_col)
     lab = communities.select(
         F.col(node_col).cast("string").alias("node"),
         F.col(comm_col).cast("string").alias("community"),
@@ -831,14 +793,7 @@ def biased_walks(
         # silently emit phantom tickets; excluding a class needs a filter,
         # not a zero weight
         raise ValueError("ticket weights must be integers >= 1")
-    sym = (
-        edges.select(F.col(src_col).cast("string").alias("u"), F.col(dst_col).cast("string").alias("v"))
-        .unionAll(
-            edges.select(F.col(dst_col).cast("string").alias("u"), F.col(src_col).cast("string").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     out = seeds.select(
         F.col(seeds.columns[0]).cast("string").alias("seed")
     ).distinct().withColumn("node", F.col("seed")).withColumn("step", F.lit(0))
@@ -933,14 +888,7 @@ def anf_hyperball(
     alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1.0 + 1.079 / m))
     c_micro = round(alpha * m * m * (1 << rho_max) * 1e6)
     lc_micro = {v: round(m * math.log(m / v) * 1e6) for v in range(1, m)}
-    sym = (
-        edges.select(F.col(src_col).cast("string").alias("u"), F.col(dst_col).cast("string").alias("v"))
-        .unionAll(
-            edges.select(F.col(dst_col).cast("string").alias("u"), F.col(src_col).cast("string").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     h60 = "cast(conv(substring(sha2(node, 256), 1, 15), 16, 10) as bigint)"
     wmask = (1 << w_bits) - 1
     regs = (
@@ -1147,18 +1095,7 @@ def assortativity(
     no self-joins.
 
     Output: a single row (n_ends, assortativity)."""
-    e = (
-        edges.select(
-            F.least(
-                F.col(src_col).cast("string"), F.col(dst_col).cast("string")
-            ).alias("a"),
-            F.greatest(
-                F.col(src_col).cast("string"), F.col(dst_col).cast("string")
-            ).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    e = _canonical_pairs(edges, src_col, dst_col)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -1262,44 +1199,24 @@ def k_truss(
 
     Each round is one edge_support pass (wedge + closure equi-joins — see
     edge_support for why this never intersects neighbor arrays) plus an
-    edge filter; the edge set only shrinks. Convergence is a fixed point,
-    so a bounded driver loop with an unrolled-SQL oracle replays exactly,
-    the k_core discipline. Eager localCheckpoint per round truncates
-    lineage.
+    edge filter; the edge set only shrinks. The loop is
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.fixpoint`: it
+    raises RuntimeError if round ``max_rounds`` still dropped an edge.
 
     Output: (src, dst, support) for surviving edges with their support
     WITHIN the truss (>= k-2 by construction), src < dst."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col).cast("string"),
-                    F.col(dst_col).cast("string")).alias("a"),
-            F.greatest(F.col(src_col).cast("string"),
-                       F.col(dst_col).cast("string")).alias("b"),
+
+    def peel(e: DataFrame) -> DataFrame:
+        return (
+            edge_support(e, src_col="a", dst_col="b")
+            .filter(F.col("support") >= k - 2)
+            .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-    sup = None
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        sup = edge_support(e, src_col="a", dst_col="b").select(
-            F.col("src").alias("a"), F.col("dst").alias("b"), "support"
-        )
-        ne = (
-            sup.filter(F.col("support") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        n_new = ne.count()
-        e = ne
-        if n_new == n_edges:
-            break
-        n_edges = n_new
+
+    truss = fixpoint(peel, _canonical_pairs(edges, src_col, dst_col),
+                     max_rounds, f"k_truss(k={k})")
     # final support is recomputed WITHIN the converged truss
-    return edge_support(e, src_col="a", dst_col="b")
+    return edge_support(truss, src_col="a", dst_col="b")
 
 
 def katz_centrality(
@@ -1385,9 +1302,10 @@ def strongly_connected_components(
 
     1. TRIM: nodes with live in-degree 0 or out-degree 0 are singleton
        SCCs by definition — peel them iteratively (the k_core discipline:
-       each round is two degree aggregates + an anti-join, the node set
-       only shrinks). On web-shaped graphs trimming removes the giant
-       acyclic fringe before any propagation runs.
+       each round is two semi-joins of the edge list against its own
+       head and tail sets, the edge set only shrinks; the live nodes are
+       the endpoints of the trimmed edges). On web-shaped graphs trimming
+       removes the giant acyclic fringe before any propagation runs.
     2. COLOR (forward): propagate min node id along edges to the fixed
        point — F(v) = min id that reaches v. The SCC containing a color's
        root r (F(r) = r) is wholly inside color r (any label reaching a
@@ -1403,15 +1321,16 @@ def strongly_connected_components(
     Every step is an equi-join / aggregate on node keys (no closure
     materialization — mutual-reachability pairs are quadratic in component
     size and exist only in the ORACLE, which replays a recursive-CTE
-    closure at test scale). Fixed points are detected by count deltas;
-    eager localCheckpoint truncates lineage per round. Raises RuntimeError
-    if max_rounds is hit — an honest failure beats a silently partial
-    decomposition.
+    closure at test scale). Trim, color and mark each run as a
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.fixpoint`.
+    Trimming always settles within (live nodes + 1) rounds; color, mark
+    and the outer loop raise RuntimeError past ``max_rounds`` rounds — an
+    honest failure beats a silently partial decomposition.
 
     Output: (node, scc_id) for every node incident to an edge, scc_id =
     min member id.
     """
-    e0 = (
+    e = (
         edges.select(
             F.col(src_col).cast("string").alias("s"),
             F.col(dst_col).cast("string").alias("d"),
@@ -1420,74 +1339,40 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    all_nodes = (
-        e0.select(F.col("s").alias("node"))
-        .unionAll(e0.select(F.col("d").alias("node")))
-        .distinct()
-    )
-    spark = edges.sparkSession
-    assigned = spark.createDataFrame([], "node string, scc_id string")
-    live = all_nodes.localCheckpoint(eager=True)
-    e = e0
-    n_live = live.count()
 
-    def _trim(live, e, n_live):
-        """Peel in/out-degree-0 nodes as singleton SCCs until stable."""
-        sing_parts = []
-        while n_live > 0:
-            indeg = e.select(F.col("d").alias("node")).distinct()
-            outdeg = e.select(F.col("s").alias("node")).distinct()
-            keep = live.join(indeg, "node", "left_semi").join(
-                outdeg, "node", "left_semi"
-            ).localCheckpoint(eager=True)
-            n_keep = keep.count()
-            if n_keep == n_live:
-                return live, e, n_live, sing_parts
-            sing_parts.append(
-                live.join(keep, "node", "left_anti")
-                .select("node", F.col("node").alias("scc_id"))
-            )
-            live = keep
-            e = (
-                e.join(keep.select(F.col("node").alias("s")), "s", "left_semi")
-                .join(keep.select(F.col("node").alias("d")), "d", "left_semi")
-                .select("s", "d")
-                .localCheckpoint(eager=True)
-            )
-            n_live = n_keep
-        return live, e, n_live, sing_parts
-
-    for _outer in range(max_rounds):
-        live, e, n_live, sing_parts = _trim(live, e, n_live)
-        for sp in sing_parts:
-            assigned = assigned.unionAll(sp)
-        if n_live == 0:
-            break
-        # forward min-label to fixed point
-        lab = live.select("node", F.col("node").alias("f")).localCheckpoint(
-            eager=True
+    def trim(e: DataFrame) -> DataFrame:
+        # an edge survives iff its tail has an in-edge and its head an out-edge
+        return (
+            e.join(e.select(F.col("d").alias("s")).distinct(), "s", "left_semi")
+            .join(e.select(F.col("s").alias("d")).distinct(), "d", "left_semi")
+            .select("s", "d")
         )
-        for _ in range(max_rounds):
+
+    assigned = []
+    live = _endpoints(e, "s", "d").localCheckpoint(eager=True)
+    for _outer in range(max_rounds):
+        # a changing trim round strips every edge of some live node, so the
+        # trim settles within |live| + 1 rounds: this cap is never hit
+        e = fixpoint(trim, e, live.count() + 1, "SCC trim")
+        kept = _endpoints(e, "s", "d").localCheckpoint(eager=True)
+        assigned.append(
+            live.join(kept, "node", "left_anti").select("node", F.col("node").alias("scc_id"))
+        )
+        if kept.isEmpty():
+            return _union(assigned)
+
+        def forward(lab: DataFrame) -> DataFrame:
             nxt = (
                 e.join(lab.select(F.col("node").alias("s"), "f"), "s")
                 .groupBy(F.col("d").alias("node"))
                 .agg(F.min("f").alias("nf"))
             )
-            new_lab = (
-                lab.join(nxt, "node", "left")
-                .select("node", F.least("f", F.coalesce("nf", "f")).alias("f"))
-                .localCheckpoint(eager=True)
+            return lab.join(nxt, "node", "left").select(
+                "node", F.least("f", F.coalesce("nf", "f")).alias("f")
             )
-            n_changed = (
-                new_lab.join(lab.withColumnRenamed("f", "of"), "node")
-                .filter(F.col("f") != F.col("of"))
-                .count()
-            )
-            lab = new_lab
-            if n_changed == 0:
-                break
-        else:
-            raise RuntimeError("SCC forward pass did not converge")
+
+        lab = fixpoint(forward, kept.select("node", F.col("node").alias("f")),
+                       max_rounds, "SCC forward pass")
         # backward mark within color, seeded at the color roots
         ce = (
             e.join(lab.select(F.col("node").alias("s"), F.col("f").alias("fs")), "s")
@@ -1496,41 +1381,28 @@ def strongly_connected_components(
             .select("s", "d")
             .localCheckpoint(eager=True)
         )
-        marked = lab.filter(F.col("node") == F.col("f")).select("node") \
-            .localCheckpoint(eager=True)
-        n_marked = marked.count()
-        for _ in range(max_rounds):
-            grown = (
-                marked.unionAll(
-                    ce.join(marked.withColumnRenamed("node", "d"), "d",
-                            "left_semi").select(F.col("s").alias("node"))
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            n_new = grown.count()
-            if n_new == n_marked:
-                break
-            marked, n_marked = grown, n_new
-        else:
-            raise RuntimeError("SCC backward pass did not converge")
-        scc = lab.join(marked, "node", "left_semi").select(
-            "node", F.col("f").alias("scc_id")
+
+        def backward(marked: DataFrame) -> DataFrame:
+            return marked.unionAll(
+                ce.join(marked.withColumnRenamed("node", "d"), "d", "left_semi")
+                .select(F.col("s").alias("node"))
+            ).distinct()
+
+        marked = fixpoint(backward, lab.filter(F.col("node") == F.col("f")).select("node"),
+                          max_rounds, "SCC backward pass")
+        assigned.append(
+            lab.join(marked, "node", "left_semi").select("node", F.col("f").alias("scc_id"))
         )
-        assigned = assigned.unionAll(scc).localCheckpoint(eager=True)
-        live = live.join(marked, "node", "left_anti").localCheckpoint(eager=True)
-        n_live = live.count()
-        if n_live == 0:
-            break
+        live = kept.join(marked, "node", "left_anti").localCheckpoint(eager=True)
+        if live.isEmpty():
+            return _union(assigned)
         e = (
-            e.join(live.select(F.col("node").alias("s")), "s", "left_semi")
-            .join(live.select(F.col("node").alias("d")), "d", "left_semi")
+            e.join(marked.select(F.col("node").alias("s")), "s", "left_anti")
+            .join(marked.select(F.col("node").alias("d")), "d", "left_anti")
             .select("s", "d")
             .localCheckpoint(eager=True)
         )
-    else:
-        raise RuntimeError("SCC outer loop did not converge")
-    return assigned
+    raise RuntimeError(f"SCC outer loop did not converge within max_rounds={max_rounds}")
 
 
 def global_clustering(
@@ -1597,93 +1469,50 @@ def coreness(
     number.
 
     Algorithm: the textbook distributed peel by increasing k — at each k,
-    repeatedly drop nodes of degree < k (one map-side-combinable degree
-    count + two semi-joins per round, the k_core shape); nodes dropped
-    while peeling at level k have coreness k-1. Each level starts from
-    the previous level's surviving subgraph, so total work is bounded by
-    (degeneracy x peel rounds) shrinking passes, with localCheckpoint
-    truncating lineage per level. At 100 TB the known optimization is
-    bin-batched peeling (process all k in a degree bin per sweep,
-    ParlayLib/Galois style) — same dataflow, fewer passes; documented,
-    not needed at gate scale where degeneracy is single-digit.
+    peel to the k-core with k_core's round (one map-side-combinable degree
+    count + two semi-joins); nodes dropped while peeling at level k have
+    coreness k-1. Each level starts from the previous level's surviving
+    subgraph, so total work is bounded by (degeneracy x peel rounds)
+    shrinking passes. At 100 TB the known optimization is bin-batched
+    peeling (process all k in a degree bin per sweep, ParlayLib/Galois
+    style) — same dataflow, fewer passes; documented, not needed at gate
+    scale where degeneracy is single-digit.
 
-    The driver loop inspects only per-round edge COUNTS (scalars), never
-    edge data. Fixed-point margin: extra inner rounds are no-ops, which
-    is what lets the SQL oracle replay a fixed unroll (the k_core
-    discipline). ``max_k`` bounds the unroll for the oracle contract —
-    the loop asserts the graph's degeneracy stays below it.
+    Each level's peel is a
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.fixpoint` that
+    raises RuntimeError if round ``max_rounds`` still peeled an edge.
+    ``max_k`` bounds the levels for the oracle's fixed unroll: a graph
+    whose degeneracy reaches ``max_k`` raises RuntimeError.
 
     Output: (node, coreness) for every node with at least one edge.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col).cast("string"),
-                    F.col(dst_col).cast("string")).alias("a"),
-            F.greatest(F.col(src_col).cast("string"),
-                       F.col(dst_col).cast("string")).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _nodes(df):
-        return (
-            df.select(F.col("a").alias("node"))
-            .unionAll(df.select(F.col("b").alias("node")))
-            .distinct()
-        )
+    e = _canonical_pairs(edges, src_col, dst_col).localCheckpoint(eager=True)
 
     shells = []
-    prev_nodes = _nodes(e).localCheckpoint(eager=True)
-    n_edges = e.count()
+    prev_nodes = _endpoints(e).localCheckpoint(eager=True)
     k = 1
-    while n_edges > 0:
-        assert k <= int(max_k), (
-            f"graph degeneracy exceeds max_k={max_k}; raise the bound "
-            f"(and the oracle unroll) together"
-        )
-        # peel at level k to a fixed point
-        for _ in range(int(max_rounds)):
-            deg = (
-                e.select(F.col("a").alias("node"))
-                .unionAll(e.select(F.col("b").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("deg"))
+    while not e.isEmpty():
+        if k > max_k:
+            raise RuntimeError(
+                f"coreness: graph degeneracy exceeds max_k={max_k}; raise the "
+                f"bound (and the oracle unroll) together"
             )
-            keep = deg.filter(F.col("deg") >= k).select("node")
-            ne = (
-                e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-                .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-                .select("a", "b")
-                .localCheckpoint(eager=True)
-            )
-            n_new = ne.count()
-            if n_new == n_edges:
-                e = ne
-                break
-            e, n_edges = ne, n_new
-            if n_edges == 0:
-                break
-        cur_nodes = _nodes(e).localCheckpoint(eager=True)
+        e = fixpoint(_peel(k), e, max_rounds, f"coreness peel at k={k}")
+        cur_nodes = _endpoints(e).localCheckpoint(eager=True)
         dropped = prev_nodes.join(cur_nodes, "node", "left_anti")
         shells.append(dropped.select(
             "node", F.lit(k - 1).cast("long").alias("coreness")
         ))
         prev_nodes = cur_nodes
         k += 1
-    # nodes that survive every peel end when edges hit 0: they were
-    # dropped (all nodes leave when the edge set empties), so every node
-    # is in exactly one shell
+    # every node leaves once the edge set empties, so every node is in
+    # exactly one shell
     if not shells:
         # empty graph: no node ever peels — empty result, same schema
         return edges.sparkSession.createDataFrame(
             [], "node string, coreness long"
         )
-    out = shells[0]
-    for s in shells[1:]:
-        out = out.unionByName(s)
-    return out
+    return _union(shells)
 
 
 def two_hop_reach(
@@ -1753,50 +1582,34 @@ def shortest_paths(
     adjacency (equi-join on the node key) + a groupBy(node).min(path)
     (map-side combinable) + an anti-join against the settled set; the
     only growth vs distance-BFS is the O(hop) path string carried per
-    frontier row, bounded by max_hops. Lineage truncated per round with
-    eager localCheckpoint.
+    frontier row, bounded by max_hops. The loop is
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.bfs_levels`.
 
     Output: (node, hop, path) for every node within max_hops (seed
     included at hop 0).
     """
     spark = edges.sparkSession
     sym = (
-        edges.select(
-            F.col(src_col).cast("string").alias("u"),
-            F.col(dst_col).cast("string").alias("v"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst_col).cast("string").alias("u"),
-                F.col(src_col).cast("string").alias("v"),
-            )
-        )
+        _undirected(edges, src_col, dst_col)
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint(eager=True)
     )
     seed = str(seed)
-    dist = spark.createDataFrame(
-        [(seed, 0, seed)], "node string, hop int, path string"
-    ).localCheckpoint(eager=True)
-    frontier = dist.select("node", "path")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
+    start = spark.createDataFrame([(seed, 0, seed)], "node string, hop int, path string")
+
+    def advance(level: DataFrame, h: int) -> DataFrame:
+        return (
+            sym.join(level.select(F.col("node").alias("u"), "path"), "u")
             .select(
                 F.col("v").alias("node"),
                 F.concat_ws(">", F.col("path"), F.col("v")).alias("path"),
             )
             .groupBy("node")
             .agg(F.min("path").alias("path"))
-            .join(dist.select("node"), "node", "left_anti")
             .select("node", F.lit(h).alias("hop"), "path")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node", "path")
+
+    dist = _union(bfs_levels(start, advance, ["node"], max_hops))
     return dist.select("node", F.col("hop").cast("int").alias("hop"), "path")
 
 
@@ -1828,46 +1641,28 @@ def betweenness_contrib(
     Scale shape: per level one equi-join + one map-side-combinable
     integer sum (forward), one equi-join + one sorted-list fold
     (backward, list bounded by degree); settled-set anti-joins as in
-    bfs_hops; eager localCheckpoint per level.
+    bfs_hops, the forward levels run by
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.bfs_levels`.
 
     Output: (node, lvl, sigma, delta) for every node within max_hops;
     delta rounded 6dp, 0.0 for deepest-level nodes.
     """
     spark = edges.sparkSession
     sym = (
-        edges.select(
-            F.col(src_col).cast("string").alias("u"),
-            F.col(dst_col).cast("string").alias("v"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst_col).cast("string").alias("u"),
-                F.col(src_col).cast("string").alias("v"),
-            )
-        )
+        _undirected(edges, src_col, dst_col)
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint(eager=True)
     )
-    levels = [
-        spark.createDataFrame(
-            [(str(seed), 1)], "node string, sigma long"
-        ).localCheckpoint(eager=True)
-    ]
-    settled = levels[0].select("node")
-    for _ in range(1, max_hops + 1):
-        prev = levels[-1]
-        nxt = (
-            sym.join(prev.selectExpr("node as u", "sigma"), "u")
-            .join(settled.withColumnRenamed("node", "v"), "v", "left_anti")
+    start = spark.createDataFrame([(str(seed), 1)], "node string, sigma long")
+
+    def advance(level: DataFrame, h: int) -> DataFrame:
+        return (
+            sym.join(level.selectExpr("node as u", "sigma"), "u")
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        settled = settled.unionAll(nxt.select("node")).localCheckpoint(eager=True)
+
+    levels = bfs_levels(start, advance, ["node"], max_hops)
     last = len(levels) - 1
     # backward: deepest level carries delta 0
     out = levels[last].select(
@@ -1951,18 +1746,8 @@ def greedy_matching(
     """
     spark = edges.sparkSession
     live = (
-        edges.select(
-            F.col(src_col).cast("string").alias("u"),
-            F.col(dst_col).cast("string").alias("v"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst_col).cast("string").alias("u"),
-                F.col(src_col).cast("string").alias("v"),
-            )
-        )
+        _undirected(edges, src_col, dst_col)
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint(eager=True)
     )
     out = spark.createDataFrame([], "u string, v string, round int")
@@ -2026,21 +1811,7 @@ def contract_graph(
     Output: (u, v, weight) with u < v, weight = number of parallel
     original (symmetrized, deduped) edges collapsed into the coarse edge.
     """
-    sym = (
-        edges.select(
-            F.col(src_col).cast("string").alias("a"),
-            F.col(dst_col).cast("string").alias("b"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst_col).cast("string").alias("a"),
-                F.col(src_col).cast("string").alias("b"),
-            )
-        )
-        .filter(F.col("a") != F.col("b"))
-        .selectExpr("least(a, b) as a", "greatest(a, b) as b")
-        .distinct()
-    )
+    sym = _canonical_pairs(edges, src_col, dst_col)
     rep = matching.select(
         F.least("u", "v").alias("r"), F.col("u").alias("n")
     ).unionByName(
@@ -2098,18 +1869,8 @@ def maximal_independent_set(
     """
     spark = edges.sparkSession
     live_e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("u"),
-            F.col(dst_col).cast("string").alias("v"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst_col).cast("string").alias("u"),
-                F.col(src_col).cast("string").alias("v"),
-            )
-        )
+        _undirected(edges, src_col, dst_col)
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint(eager=True)
     )
     live_n = live_e.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=True)
@@ -2415,10 +2176,13 @@ def bipartite_check(
     Plan: one CC run (large/small-star, shared operator) provides both
     the component key and the seed; ONE multi-source BFS colors every
     component simultaneously (frontier = all seeds at parity 0 — rounds
-    scale with graph diameter, not component count); the audit is a
-    single self-equi-join of the colored edge list. Per-round work is
-    frontier-sized with left_anti dedup against the visited set,
-    lineage truncated by localCheckpoint (the CC-loop discipline).
+    scale with graph diameter, not component count; every node at level h
+    has parity h mod 2); the audit is a single self-equi-join of the
+    colored edge list. The coloring is
+    :func:`~knowledgegraphbuilder_spark.functions.fixpoint.bfs_levels`
+    with ``max_iter`` hops; if that leaves a node uncolored (a component
+    deeper than ``max_iter``) this raises RuntimeError instead of
+    auditing a partial coloring.
 
     Returns (component, n_nodes, n_edges, n_odd_edges, is_bipartite).
     """
@@ -2426,48 +2190,27 @@ def bipartite_check(
         connected_components,
     )
 
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("s0"),
-            F.col(dst_col).cast("string").alias("d0"),
-        )
-        .filter(F.col("s0") != F.col("d0"))
-        # canonical undirected pair: (a,b) and (b,a) are the same edge
-        .select(
-            F.least("s0", "d0").alias("src"),
-            F.greatest("s0", "d0").alias("dst"),
-        )
-        .distinct()
+    e = _canonical_pairs(edges, src_col, dst_col).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    und = e.unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    und = _undirected(e, "src", "dst").localCheckpoint(eager=True)
     comp = connected_components(e).localCheckpoint(eager=True)  # (vertex, component)
     # seeds: the component id IS its min vertex in this CC implementation
-    visited = comp.select(
+    start = comp.select(
         F.col("component").alias("node"), F.col("component")
     ).distinct().withColumn("parity", F.lit(0).cast("long"))
-    frontier = visited
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        step = (
-            frontier.join(und.withColumnRenamed("src", "node"), "node")
-            .select(
-                F.col("dst").alias("node"),
-                "component",
-                ((F.col("parity") + 1) % 2).alias("parity"),
-            )
+
+    def advance(level: DataFrame, h: int) -> DataFrame:
+        return (
+            level.join(und.withColumnRenamed("u", "node"), "node")
+            .select(F.col("v").alias("node"), "component",
+                    F.lit(h % 2).cast("long").alias("parity"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        # a node reached at both parities in the SAME round keeps min
-        step = step.groupBy("node", "component").agg(
-            F.min("parity").cast("long").alias("parity")
-        )
-        visited = visited.unionByName(step).localCheckpoint(eager=True)
-        frontier = step
+
+    visited = _union(bfs_levels(start, advance, ["node"], max_iter))
+    if not comp.join(visited.withColumnRenamed("node", "vertex"), "vertex", "left_anti").isEmpty():
+        raise RuntimeError(f"bipartite_check: BFS left nodes uncolored at max_iter={max_iter}")
     colored = e.join(
         visited.select(F.col("node").alias("src"),
                        F.col("parity").alias("p_src"), "component"), "src"

@@ -17,9 +17,9 @@ personalization vector (matches GDS semantics for personalized PR).
 
 Scale notes: the transition join shuffles on vertex id each round —
 partitioning is stable across iterations so AQE reuses the layout; ranks are
-``localCheckpoint``ed every few rounds to truncate lineage; convergence is an
-L1-delta early exit (the reference runs a fixed 100 rounds; we stop early when
-converged, identical result to within ``tol``).
+``localCheckpoint``ed every round to truncate lineage; convergence is an
+L1-delta early exit checked every 5 rounds (the reference runs a fixed 100
+rounds; we stop early when converged, identical result to within ``tol``).
 """
 
 from __future__ import annotations
@@ -95,10 +95,11 @@ def personalized_pagerank_batch(
     keyed by (query_id, node_id): every iteration is one transition join +
     one aggregation for every query together, so the job count is max_iter
     regardless of q and the per-iteration shuffle carries the honest q-scaled
-    state. Update rule per query is IDENTICAL to personalized_pagerank
-    (symmetrize, out-weight normalize, dangling mass -> personalization);
-    tests pin batch == per-query loop. The small-graph driver path sweeps
-    queries over numpy arrays rebuilt per query's weight view.
+    state. Update rule: symmetrize, out-weight normalize, dangling mass ->
+    personalization; ranks are pinned every round and the L1 convergence
+    test runs every 5 rounds. personalized_pagerank is this function over
+    one query. The small-graph driver path sweeps queries over numpy
+    arrays rebuilt per query's weight view.
 
     ``n_edges``: caller-known edge count (or any count capped at
     ``small_graph_threshold``) — skips the probe count job."""
@@ -211,7 +212,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     max_iter: int = 100,
     tol: float = 1.0e-6,
-    checkpoint_every: int = 5,
     src_col: str = "head_node_id",
     dst_col: str = "tail_node_id",
     weight_col: str = "weight",
@@ -221,98 +221,19 @@ def personalized_pagerank(
     """edges(head_node_id, tail_node_id, weight) + source_nodes(node_id)
     -> (node_id, score).
 
+    :func:`personalized_pagerank_batch` over a one-query view (a literal
+    ``query_id``, dropped from the result), so both the driver-side power
+    iteration (< ``small_graph_threshold`` edges; 0 forces the distributed
+    loop, tests do) and the distributed loop are the batch function's.
     ``n_edges``: caller-known edge count (or any count capped at
-    ``small_graph_threshold``) — skips the probe count job.
-
-    Adaptive: if the edge list fits comfortably on the driver
-    (< ``small_graph_threshold`` edges), run the identical update rule as a
-    vectorized driver-side power iteration — an iterative DataFrame loop on a
-    tiny graph pays ~seconds of job latency PER ITERATION for milliseconds of
-    math. The distributed loop below is the 10^9+-edge path; set the
-    threshold to 0 to force it (tests do)."""
-    if small_graph_threshold > 0:
-        if n_edges is None:
-            n_edges = edges.limit(small_graph_threshold).count()
-        if n_edges < small_graph_threshold:
-            rows = edges.select(src_col, dst_col, weight_col).collect()
-            sources = [r["node_id"] for r in source_nodes.select("node_id").collect()]
-            if not sources:
-                raise ValueError("personalized pagerank needs at least one source node")
-            result = _driver_ppr(
-                [(r[0], r[1], r[2]) for r in rows], sources, float(damping), max_iter, tol
-            )
-            return edges.sparkSession.createDataFrame(result, "node_id string, score double")
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).union(
-        edges.select(
-            F.col(dst_col).alias("src"), F.col(src_col).alias("dst"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-    )
-    # normalized transition weights: w / W(src); map-side combinable agg
-    out_w = sym.groupBy("src").agg(F.sum("w").alias("w_total"))
-    trans = sym.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("w_total")).alias("tw")
-    ).localCheckpoint(eager=True)
-
-    vertices = trans.select(F.col("src").alias("node_id")).union(
-        trans.select(F.col("dst").alias("node_id"))
-    ).union(source_nodes.select("node_id")).distinct()
-
-    n_sources = source_nodes.count()
-    if n_sources == 0:
+    ``small_graph_threshold``) — skips the probe count job. Raises
+    ValueError when ``source_nodes`` is empty."""
+    if source_nodes.isEmpty():
         raise ValueError("personalized pagerank needs at least one source node")
-    pers = vertices.join(
-        source_nodes.select("node_id", F.lit(1.0 / n_sources).alias("p")),
-        "node_id", "left",
-    ).select("node_id", F.coalesce("p", F.lit(0.0)).alias("p")).localCheckpoint(eager=True)
-
-    ranks = pers.select("node_id", F.col("p").alias("score"))
-    d = float(damping)
-    for it in range(max_iter):
-        # NOTE: new_ranks references ranks twice (contribs + dangling); left
-        # lazy the plan would double per iteration, so ranks is materialized
-        # (localCheckpoint) every round and the L1 convergence check runs
-        # every `checkpoint_every` rounds.
-        contribs = (
-            trans.join(ranks.withColumnRenamed("node_id", "src"), "src")
-            .select(F.col("dst").alias("node_id"), (F.col("score") * F.col("tw")).alias("c"))
-            .groupBy("node_id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # dangling mass (vertices with no out-edges) redistributed via p(v);
-        # folded in as a broadcast 1-row crossJoin so no driver round-trip
-        dangling = (
-            ranks.join(out_w.withColumnRenamed("src", "node_id"), "node_id", "left_anti")
-            .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("dmass"))
-        )
-        new_ranks = (
-            pers.join(contribs, "node_id", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node_id",
-                (
-                    (1.0 - d) * F.col("p")
-                    + d * (F.coalesce("inflow", F.lit(0.0)) + F.col("dmass") * F.col("p"))
-                ).alias("score"),
-            )
-        )
-        new_ranks = new_ranks.localCheckpoint(eager=True)
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            # single-step L1 vs tol — same criterion as _driver_ppr,
-            # evaluated at checkpoint boundaries (round-3 ADVICE: an
-            # interval-summed delta vs tol*interval diverges from the
-            # per-iteration criterion because deltas shrink geometrically)
-            delta = (
-                new_ranks.join(ranks.withColumnRenamed("score", "old"), "node_id")
-                .agg(F.sum(F.abs(F.col("score") - F.col("old"))))
-                .collect()[0][0]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
-    return ranks
+    qid = F.lit("q").alias("query_id")
+    return personalized_pagerank_batch(
+        edges.select(qid, src_col, dst_col, weight_col),
+        source_nodes.select(qid, "node_id"),
+        damping, max_iter, tol, src_col, dst_col, weight_col,
+        small_graph_threshold, n_edges,
+    ).drop("query_id")

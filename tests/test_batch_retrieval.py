@@ -103,8 +103,10 @@ def test_ann_lsh_batch_equals_per_query_lsh(spark, sf_dir):
 
 
 def test_batch_ppr_matches_single_distributed(spark):
-    """Query-keyed distributed batch loop == single-query distributed loop,
-    per query, on a shared graph with per-query weight views."""
+    """Queries do not leak into each other: two queries run together in the
+    query-keyed distributed loop score each query exactly as that query run
+    alone (personalized_pagerank, one query), on a shared graph with
+    per-query weight views."""
     edges = []
     for i in range(12):
         edges.append((f"n{i}", f"n{(i * 3 + 1) % 12}", 0.2 + 0.05 * (i % 4)))

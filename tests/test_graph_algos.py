@@ -72,7 +72,7 @@ def test_ppr_matches_numpy(spark, sources):
     got = {
         r["node_id"]: r["score"]
         for r in personalized_pagerank(
-            edf, sdf, 0.85, 60, 1e-12, checkpoint_every=10, small_graph_threshold=0
+            edf, sdf, 0.85, 60, 1e-12, small_graph_threshold=0
         ).collect()
     }
     want = numpy_ppr(edges, sources)
@@ -94,7 +94,7 @@ def test_ppr_isolated_source_dangling(spark):
     edf = spark.createDataFrame(edges, "head_node_id string, tail_node_id string, weight double")
     sdf = spark.createDataFrame([("z",)], "node_id string")
     got = {r["node_id"]: r["score"] for r in
-           personalized_pagerank(edf, sdf, 0.85, 40, 1e-12, checkpoint_every=8,
+           personalized_pagerank(edf, sdf, 0.85, 40, 1e-12,
                                  small_graph_threshold=0).collect()}
     want = numpy_ppr(edges, ["z"])
     for v in want:
@@ -577,3 +577,45 @@ def test_anf_repartition_stable(spark):
     a = sorted(map(tuple, anf_hyperball(edges, max_hops=2).collect()))
     b = sorted(map(tuple, anf_hyperball(edges.repartition(11), max_hops=2).collect()))
     assert a == b
+
+
+def test_adjacency_parity_self_loops_and_duplicates(spark):
+    # a self-loop, a duplicate edge and a reversed duplicate: LPA and both
+    # walk operators see self-loops, matching and MIS drop them; rows
+    # recorded before the operators shared one symmetrize helper
+    from knowledgegraphbuilder_spark.operators.graphstats import (
+        biased_walks,
+        deterministic_walks,
+        greedy_matching,
+        label_propagation,
+        maximal_independent_set,
+    )
+
+    edges = spark.createDataFrame([
+        ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"), ("e", "e"),
+        ("a", "b"), ("d", "c"), ("e", "f"), ("f", "g"), ("g", "g"),
+    ], "src string, dst string")
+    seeds = spark.createDataFrame([("a",), ("e",), ("g",)], "node string")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(label_propagation(edges, rounds=2)) == [
+        ("a", "d"), ("b", "d"), ("c", "c"), ("d", "f"), ("e", "g"), ("f", "g"), ("g", "g"),
+    ]
+    assert rows(deterministic_walks(edges, seeds, length=2)) == [
+        ("a", 0, "a"), ("a", 1, "b"), ("a", 2, "c"),
+        ("e", 0, "e"), ("e", 1, "d"), ("e", 2, "c"),
+        ("g", 0, "g"), ("g", 1, "g"), ("g", 2, "f"),
+    ]
+    assert rows(biased_walks(edges, seeds, length=2)) == [
+        ("a", 0, "a"), ("a", 1, "c"), ("a", 2, "d"),
+        ("e", 0, "e"), ("e", 1, "e"), ("e", 2, "f"),
+        ("g", 0, "g"), ("g", 1, "f"), ("g", 2, "e"),
+    ]
+    assert rows(greedy_matching(edges, rounds=3)) == [
+        ("a", "b", 1), ("c", "d", 2), ("e", "f", 3),
+    ]
+    assert rows(maximal_independent_set(edges, rounds=3)) == [
+        ("a", 1), ("d", 2), ("f", 3),
+    ]
